@@ -546,6 +546,14 @@ object TpchQueries {
           |  -- The broadcast semi-join shrinks the aggregate's input
           |  -- and its (partkey, suppkey) exchange to the bolt slice
           |  -- (~1/12 of lineitem) instead of the full ship-year.
+          |  -- Spark's constraint inference also copies this IN
+          |  -- predicate through l_partkey = ps_partkey onto the ps_q20
+          |  -- side, as a second bolt semi-join on the part scan that
+          |  -- partsuppFrom reads. The plan therefore carries TWO bolt
+          |  -- semi-joins, not one: the pre-filter adds two broadcast
+          |  -- joins and two scans to q20's docs/PLAN_MANIFEST.tsv row
+          |  -- (bhj 4 -> 6, scan 6 -> 8; nodes 79 and 97 of
+          |  -- plans/r17/tpch_q20_excess_stock_after.txt).
           |  SELECT l_partkey, l_suppkey, sum(l_quantity) AS qty
           |  FROM li_q20
           |  WHERE CAST(l_shipdate AS DATE) >= DATE '1996-01-01'
