@@ -1,28 +1,29 @@
 package graft.core
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** SparkSession factory for the graft engine.
   *
-  * Local-mode sessions are tuned for the test harness (local[32],
-  * 128 GiB box) but every conf here is chosen to also make sense on a
-  * large cluster: AQE on (runtime coalescing + skew-join splitting),
+  * Every conf here is chosen to make sense both in one local JVM and
+  * on a large cluster: AQE on (runtime coalescing + skew-join splitting),
   * shuffle partitions sized to cores (not the 200 default), UTC session
   * time zone (the reference pins per-row timezones explicitly — see
   * reference src/spark/collector.py:361-366).
   */
 object GraftSession {
 
-  /** Shared engine confs, applied to any builder (local or cluster). */
-  def tuned(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
+  /** Shared engine confs, applied to every session graft builds. */
+  private def tuned(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
     b.config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.filterPushdown", "true")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark has no type
-      // for; read as long and normalize in Tables.events.
+      // a lake that stores events.ts as TIMESTAMP(NANOS) (Spark has no
+      // ns type) reads it as long, normalized in Tables.events; the
+      // shipped tiers store micros and never take that branch
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // graft's native Catalyst expressions (token_fingerprint, ...)
       .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
@@ -34,29 +35,29 @@ object GraftSession {
         new java.io.File(sys.props("java.io.tmpdir"), "graft_warehouse").toString)
       .config("spark.ui.enabled", "false")
 
-  /** Cluster session: no master set here — spark-submit / the cluster
-    * manager provides it (YARN, k8s, standalone). Shuffle partitions
-    * default to a cluster-appropriate width; AQE coalesces down at
-    * runtime, so oversizing is the safe direction. All other engine
-    * confs are identical to local mode — the plans the tests pin are
-    * the plans a cluster runs.
+  /** The one session factory: every main, the specs and the bench
+    * build their session here. Local mode with `cores` task threads
+    * unless a master is already set — spark-submit passes its
+    * `--master` as a system property, which a fresh [[SparkConf]]
+    * reads — so the production CLI runs on whatever cluster launches
+    * it. All engine confs are identical either way: the plans the
+    * tests pin are the plans a cluster runs.
     */
-  def cluster(appName: String, shufflePartitions: Int = 512): SparkSession =
-    tuned(SparkSession.builder().appName(appName), shufflePartitions)
-      .getOrCreate()
-
-  /** Local session for tests / bench. One JVM, `cores` task threads. */
   def local(appName: String = "graft", cores: Int = defaultCores): SparkSession = {
-    val spark = tuned(
-      SparkSession
-        .builder()
-        .master(s"local[$cores]")
-        .appName(appName),
-      shufflePartitions = cores
-    ).getOrCreate()
+    val (master, width) = masterAndWidth(new SparkConf(), cores)
+    val b = SparkSession.builder().appName(appName)
+    val spark = tuned(master.fold(b)(b.master), width).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** (master to set, shuffle width): `local[cores]` and `cores` when
+    * `conf` names no master; otherwise the preset master wins and
+    * shuffles start at a cluster width of 512 — AQE coalesces down at
+    * runtime, so oversizing is the safe direction.
+    */
+  private[graft] def masterAndWidth(conf: SparkConf, cores: Int): (Option[String], Int) =
+    if (conf.contains("spark.master")) (None, 512) else (Some(s"local[$cores]"), cores)
 
   def defaultCores: Int =
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(

@@ -24,7 +24,12 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read
       .option("mergeSchema", "true")
-      .parquet(s"$dir/$name.parquet")
+      .parquet(path(dir, name))
+
+  /** The parquet path of one table — also what a memoized artifact
+    * names as its input (see [[ArtifactMemo]]).
+    */
+  def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
   def region(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "nation")
@@ -33,10 +38,11 @@ object Tables {
   def part(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "part")
   def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
-  /** events.ts is TIMESTAMP(NANOS) parquet — Spark has no ns type, so the
-    * session reads it as long (nanosAsLong) and we truncate to micros
+  /** events.ts is TIMESTAMP(MICROS) on every shipped tier (sf0.001,
+    * sf0.01, sf0.1). A lake that stores TIMESTAMP(NANOS) — Spark has
+    * no ns type — reads as long (nanosAsLong), truncated to micros
     * here. Downstream queries must still never emit a raw ts (DuckDB
-    * keeps ns); emit derived dates/strings/epoch-seconds instead.
+    * would keep ns there); emit derived dates/strings/epoch-seconds.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     // Runtime-settable SQL conf: the driver may hand us a session that

@@ -144,7 +144,7 @@ object Privacy {
 
   /** The per-term quantized log the entropy audit folds:
     * floor(1e6·ln(nc/ncv)) with the snap-to-integer guard band.
-    * SHARED by the audit and [[graft.tools.LogBoundaryFuzz]] so the
+    * SHARED by the audit and `graft.tools.LogBoundaryFuzz` (test) so the
     * boundary-fuzz harness certifies the exact shipping expression,
     * never a reimplementation. Mirrored verbatim in the DuckDB twin
     * (LakehouseQueries privacy_entropy_l) and the fuzz driver's

@@ -27,11 +27,11 @@ object TextQueries {
     * unigram/bigram count tables with their own full-corpus explode +
     * aggregation passes. The counts are deterministic functions of the
     * corpus, vocabulary-bounded (they already broadcast in every
-    * consumer plan), and session-scoped via [[graft.core.SessionMemo]],
-    * so they materialize once per (session, dir) and every consumer
-    * reads the checkpointed tables. Oracle semantics untouched: the
-    * DuckDB twin re-derives the counts per query either way and the
-    * values are bit-identical.
+    * consumer plan), and memoized on `documents` via
+    * [[graft.core.ArtifactMemo]], so they materialize once per session
+    * and corpus stamp and every consumer reads the checkpointed
+    * tables. Oracle semantics untouched: the DuckDB twin re-derives the
+    * counts per query either way and the values are bit-identical.
     *
     * nTotal (corpus token count) folds over the MATERIALIZED unigram
     * table — a vocab-sized scalar job, not the full-corpus count()
@@ -40,12 +40,14 @@ object TextQueries {
     */
   private final case class LmArtifacts(uni: DataFrame, bi: DataFrame,
                                        nTotal: Long, nB: Long)
-  private val lmArtMemo = new graft.core.SessionMemo[LmArtifacts]
-  private val lmScoresMemo = new graft.core.SessionMemo[DataFrame]
-  private val dupSpanMemo = new graft.core.SessionMemo[DataFrame]
+  private val lmArtMemo = new graft.core.ArtifactMemo[LmArtifacts]
+  private val lmScoresMemo = new graft.core.ArtifactMemo[DataFrame]
+  private val dupSpanMemo = new graft.core.ArtifactMemo[DataFrame]
+  private val bpeMergeMemo = new graft.core.ArtifactMemo[Vector[(String, String)]]
+  private def docsInput(dir: String): Seq[String] = Seq(Tables.path(dir, "documents"))
 
   private def lmArtifacts(spark: SparkSession, dir: String): LmArtifacts =
-    lmArtMemo.get(spark, dir) {
+    lmArtMemo.get(spark, docsInput(dir)) {
       import graft.core.GraftSession.LineageOps
       val toks = Tables.documents(spark, dir)
         .select(split(col("text"), " ").as("t"))
@@ -72,7 +74,7 @@ object TextQueries {
     * returning the memo verbatim is result caching, not sharing).
     */
   private def lmScores(spark: SparkSession, dir: String): DataFrame =
-    lmScoresMemo.get(spark, dir) {
+    lmScoresMemo.get(spark, docsInput(dir)) {
       import graft.core.GraftSession.LineageOps
       bigramLmScores(spark, dir).truncateLineage()
     }
@@ -84,23 +86,19 @@ object TextQueries {
     * live instead of reading this memo (r16 verdict item 1).
     */
   private def dupSpanProf(spark: SparkSession, dir: String): DataFrame =
-    dupSpanMemo.get(spark, dir) {
+    dupSpanMemo.get(spark, docsInput(dir)) {
       import graft.core.GraftSession.LineageOps
       Dedup.dupSpanProfile(Tables.documents(spark, dir), "doc_id", "text",
         nGram = 5, minDocFreq = 2).truncateLineage()
     }
 
   /** Fitted BPE merge table shared by text_bpe_tokens and
-    * text_tokenizer_fertility (identical corpus + defaults). The value
-    * is a bounded driver-held Vector (≤ nMerges pairs) — session-free,
-    * so a bare-dir key suffices (the nBasketsMemo doctrine: raw input
-    * dirs are immutable within a session).
+    * text_tokenizer_fertility (identical corpus + defaults): a
+    * bounded driver-held Vector (≤ nMerges pairs).
     */
-  private val bpeFitMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Vector[(String, String)]]()
-  private def bpeFit(spark: SparkSession, dir: String): Vector[(String, String)] =
-    bpeFitMemo.computeIfAbsent(dir, _ => graft.core.MemoStats.timed(
-      graft.functions.Bpe.fitFromCorpus(Tables.documents(spark, dir), col("text"))))
+  private[graft] def bpeFit(spark: SparkSession, dir: String): Vector[(String, String)] =
+    bpeMergeMemo.get(spark, docsInput(dir))(
+      graft.functions.Bpe.fitFromCorpus(Tables.documents(spark, dir), col("text")))
 
   val queries: Map[String, Q] = Map(
     // Exact dedup: hash-groupBy on full text.

@@ -74,95 +74,34 @@ object VectorQueries {
     s"(SELECT greatest($K2Kc, least($SemDedupMaxK, " +
       s"count(*) // ${SemDedupPerCluster * K2Kf})) FROM q)"
 
-  /** Snapshot-scoped memo: ONE entry per (dir, tag), REPLACED — not
-    * accumulated — when the corpus snapshot stamp moves. A corpus
-    * refreshed in place within a session (the incremental-curation
-    * shape) rebuilds on next access while superseded snapshots' values
-    * drop out, so repeated refreshes never grow the map (the r15
-    * nEmbMemo keyed on the full snapshot string accumulated one entry
-    * per refresh forever). Values are plain driver-held data (counts,
-    * trained centroid arrays) — session-independent, deterministic
-    * functions of (snapshot, params) — so no session-liveness
-    * validation is needed, unlike [[JoinQueries]]' DataFrame memos.
+  /** Embeddings row count, one pre-plan scalar job per corpus stamp.
+    * The oracle's scale-relative-k subquery recomputes count(*) live
+    * per run, so a corpus refreshed IN PLACE must re-count here too or
+    * the engine's k silently goes stale against the oracle's: the
+    * [[graft.core.ArtifactMemo]] stamp key moves with the rewrite.
     */
-  private final class SnapshotMemo[T] {
-    private val m = new java.util.concurrent.ConcurrentHashMap[String, (String, T)]()
-    def get(spark: SparkSession, dir: String, tag: String)(build: => T): T = {
-      val snap = embSnapshotKey(spark, dir)
-      m.compute(s"$dir|$tag", (_, old) =>
-        if (old != null && old._1 == snap) old
-        else (snap, graft.core.MemoStats.timed(build)))._2
-    }
-  }
-
-  /** Embeddings row count, one pre-plan scalar job per corpus SNAPSHOT
-    * per JVM. Snapshot-keyed, not bare-dir-keyed: the oracle's
-    * scale-relative-k subquery recomputes count(*) live per run, so a
-    * corpus refreshed IN PLACE within a session must re-count here too
-    * or the engine's k silently goes stale against the oracle's.
-    * Non-local URIs (no File view) fall back to the bare-dir key — the
-    * per-JVM-immutable assumption, now scoped to stores we can't
-    * cheaply stamp.
-    */
-  private val nEmbMemo = new SnapshotMemo[Long]
-  /** Stamp resolution is a getFileStatus + recursive listStatus — a
-    * remote round-trip per file on object stores — and every memoized
-    * artifact access pays it. A short TTL cache (1 s) collapses the
-    * within-query and within-sweep repeats to one round-trip while
-    * staying far under any real refresh cadence. (The in-place-refresh
-    * spec sleeps ≥ 1.1 s across its rewrite precisely to clear this
-    * window — keep the TTL under that if it ever changes.)
-    */
-  private val StampTtlNanos = 1000L * 1000 * 1000
-  private val stampMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, String)]()
-  private[graft] def embSnapshotKey(spark: SparkSession, dir: String): String = {
-    val now = System.nanoTime()
-    val cached = stampMemo.get(dir)
-    if (cached != null && now - cached._1 < StampTtlNanos) cached._2
-    else {
-      val key = try {
-        // Hadoop FileSystem depth, not java.io.File: the corpora this
-        // memo guards live wherever the tables are read from (hdfs://,
-        // s3a://, file:/ URIs), and a local-only stamp would silently
-        // degrade to the bare-dir key on exactly the cluster stores
-        // that refresh corpora in place
-        val p = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def stamp(s: org.apache.hadoop.fs.FileStatus): Long =
-          if (s.isDirectory)
-            (s.getModificationTime +: fs.listStatus(s.getPath).map(stamp).toSeq).max
-          else s.getModificationTime
-        val st = fs.getFileStatus(p)
-        s"$dir@${stamp(st)}:${st.getLen}"
-      } catch { case _: Exception => dir } // unreadable: bare-dir fallback
-      stampMemo.put(dir, (now, key))
-      key
-    }
-  }
+  private val nEmbMemo = new graft.core.ArtifactMemo[Long]
+  private def embInput(dir: String): Seq[String] = Seq(Tables.path(dir, "embeddings"))
   private def embCount(spark: SparkSession, dir: String): Long =
-    nEmbMemo.get(spark, dir, "n") { Tables.embeddings(spark, dir).count() }
+    nEmbMemo.get(spark, embInput(dir)) { Tables.embeddings(spark, dir).count() }
 
   /** Trained-codebook memos (verdict r15 item 1): five of the twelve
     * slowest bench queries re-ran an identical Lloyd fit — R rounds of
     * full-corpus aggregation plus a checkpoint — on the same corpus
     * per query. The fits are deterministic functions of
-    * (snapshot, trainFilter, k/kc/kf, rounds) and their results are
-    * bounded driver arrays, so they memoize exactly like the graph
-    * tier's shared artifacts but WITHOUT session validation (no
-    * cached blocks — the checkpoint inside training is torn down with
-    * its session; only the arrays survive, and those are
-    * session-free). Oracle semantics untouched: the oracle re-derives
+    * (corpus stamp, trainFilter, k/kc/kf, rounds) and their results
+    * are bounded driver arrays, memoized like the graph tier's shared
+    * artifacts. Oracle semantics untouched: the oracle re-derives
     * training per query either way and the results are bit-identical.
     */
-  private val flatCentMemo = new SnapshotMemo[Seq[(Long, Array[Long])]]
-  private val twoLevelMemo = new SnapshotMemo[Clustering.TwoLevelCodebook]
+  private val flatCentMemo = new graft.core.ArtifactMemo[Seq[(Long, Array[Long])]]
+  private val twoLevelMemo = new graft.core.ArtifactMemo[Clustering.TwoLevelCodebook]
   /** evenOnly = the frozen-codebook incremental contract's training
     * snapshot (vec_id % 2 = 0); full = train on the whole corpus.
     */
   private def trainedFlat(spark: SparkSession, dir: String, evenOnly: Boolean,
                           k: Int, rounds: Int): Seq[(Long, Array[Long])] =
-    flatCentMemo.get(spark, dir, s"even=$evenOnly|k=$k|r=$rounds") {
+    flatCentMemo.get(spark, embInput(dir), s"even=$evenOnly|k=$k|r=$rounds") {
       val emb = Tables.embeddings(spark, dir)
       Clustering.kmeansCentroids(
         if (evenOnly) emb.where(col("vec_id") % 2 === 0) else emb,
@@ -170,7 +109,7 @@ object VectorQueries {
     }
   private def trained2l(spark: SparkSession, dir: String, evenOnly: Boolean,
                         kc: Int, kf: Int, rounds: Int): Clustering.TwoLevelCodebook =
-    twoLevelMemo.get(spark, dir, s"even=$evenOnly|kc=$kc|kf=$kf|r=$rounds") {
+    twoLevelMemo.get(spark, embInput(dir), s"even=$evenOnly|kc=$kc|kf=$kf|r=$rounds") {
       val emb = Tables.embeddings(spark, dir)
       Clustering.kmeansTwoLevelCodebook(
         if (evenOnly) emb.where(col("vec_id") % 2 === 0) else emb,

@@ -159,20 +159,21 @@ class ScaleEnvelopeSpec extends SparkSpec {
       (0 until n).map(i => (i.toLong, Seq.fill(64)(0.1f)))
         .toDF("vec_id", "embedding")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val emb = graft.core.Tables.path(dir, "embeddings")
     write(10)
-    val k1 = graft.queries.VectorQueries.embSnapshotKey(spark, dir)
+    val k1 = graft.core.ArtifactMemo.stamp(spark, emb)
     // an in-place refresh changes content length and/or mtime — the
     // overwrite rewrites part files, so the directory stamp moves
     Thread.sleep(1100) // FS mtime granularity can be 1 s
     write(25)
-    val k2 = graft.queries.VectorQueries.embSnapshotKey(spark, dir)
+    val k2 = graft.core.ArtifactMemo.stamp(spark, emb)
     assert(k1 !== k2, "snapshot key must change when the corpus is refreshed in place")
     // the stamp resolves through the Hadoop FileSystem, so URI-form
     // paths stamp identically to their plain-path twins
-    assert(graft.queries.VectorQueries.embSnapshotKey(spark, s"file:$dir")
-      .endsWith(k2.drop(dir.length)), "file: URI must reach the same stamp")
-    // an absent path degrades to the bare-dir key, not an error
-    assert(graft.queries.VectorQueries.embSnapshotKey(spark, "/nonexistent/x") ===
-      "/nonexistent/x")
+    assert(graft.core.ArtifactMemo.stamp(spark, s"file:$emb")
+      .endsWith(k2.drop(emb.length)), "file: URI must reach the same stamp")
+    // an absent path degrades to the bare-path key, not an error
+    assert(graft.core.ArtifactMemo.stamp(spark, "/nonexistent/x/embeddings.parquet") ===
+      "/nonexistent/x/embeddings.parquet")
   }
 }

@@ -13,8 +13,8 @@ import graft.functions.TextFns
   * equals a from-scratch reference pipeline (the pre-memo form,
   * reimplemented here independently of the artifact code), (b) the
   * dup-span profile and BPE fit memos return exactly what their
-  * direct builders return, (c) SessionMemo caches per (session, dir),
-  * replaces on a new session, and refuses a stopped one.
+  * direct builders return, (c) ArtifactMemo caches per (session,
+  * inputs), replaces on a new session, and refuses a stopped one.
   */
 class TextArtifactSpec extends SparkSpec {
 
@@ -83,29 +83,30 @@ class TextArtifactSpec extends SparkSpec {
       viaDirect.exceptAll(viaQuery).isEmpty)
   }
 
+  // ArtifactMemo replaced SessionMemo; the test keeps its original name.
   test("SessionMemo caches per (session, dir), rebuilds per session, refuses stopped") {
-    val memo = new graft.core.SessionMemo[java.lang.Long]
+    val memo = new graft.core.ArtifactMemo[java.lang.Long]
     var builds = 0
     def build(): java.lang.Long = { builds += 1; java.lang.Long.valueOf(builds.toLong) }
 
-    val a1 = memo.get(spark, "/d1")(build())
-    val a2 = memo.get(spark, "/d1")(build())
+    val a1 = memo.get(spark, Seq("/d1"))(build())
+    val a2 = memo.get(spark, Seq("/d1"))(build())
     assert(a1 == 1L && a2 == 1L && builds == 1, "hit must not rebuild")
 
-    val b1 = memo.get(spark, "/d2")(build())
+    val b1 = memo.get(spark, Seq("/d2"))(build())
     assert(b1 == 2L && builds == 2, "distinct dirs get distinct entries")
 
     val s2 = spark.newSession()
-    val c1 = memo.get(s2, "/d1")(build())
+    val c1 = memo.get(s2, Seq("/d1"))(build())
     assert(c1 == 3L && builds == 3, "a different session must REPLACE the entry")
     // and the replacement is sticky: the old session's value is gone
-    val c2 = memo.get(s2, "/d1")(build())
+    val c2 = memo.get(s2, Seq("/d1"))(build())
     assert(c2 == 3L && builds == 3)
 
     // stopped-session refusal: the guard's predicate is
     // sparkContext.isStopped, which cannot be made true in this
     // shared-context JVM without killing every other suite — the
-    // branch is a one-line `require` reviewed in SessionMemo.scala;
+    // branch is a one-line `require` reviewed in ArtifactMemo.scala;
     // the live path (admission) is what the assertions above cover.
     succeed
   }

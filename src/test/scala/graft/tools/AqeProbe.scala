@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** Measurement probe (r17 verdict item 8): time named SparkEntry
   * queries with AQE on vs off in two child sessions sharing one
   * context, to quantify per-round adaptive re-planning overhead on the
-  * iterative graph tier. Usage: runMain graft.tools.AqeProbe <sfDir>
+  * iterative graph tier. Usage: Test/runMain graft.tools.AqeProbe <sfDir>
   * <name> [name...]. Prints one line per (query, mode) with the
   * min/median over SPARK_GRAFT_PROBE_ITERS (default 5) noop-sink runs.
   */

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Engine side of the quantized-log boundary fuzz
@@ -19,12 +18,7 @@ import org.apache.spark.sql.functions._
 object LogBoundaryFuzz {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: LogBoundaryFuzz <pairsParquet> <outParquet>")
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local("graft-log-boundary-fuzz")
     spark.read.parquet(args(0))
       // the SHIPPING kernel, by reference — including the round-15
       // snap-to-integer guard band

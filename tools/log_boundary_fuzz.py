@@ -67,7 +67,7 @@ print(f"[fuzz] {n_pairs} pairs (exhaustive nc<={EXH} + {NRAND} random)")
 env = dict(os.environ)
 r = subprocess.run(
     ["sbt", "-batch",
-     f'runMain graft.tools.LogBoundaryFuzz {pairs_pq} {spark_pq}'],
+     f'Test/runMain graft.tools.LogBoundaryFuzz {pairs_pq} {spark_pq}'],
     cwd="/root/repo", env=env, capture_output=True, text=True)
 if r.returncode != 0:
     print(r.stdout[-3000:], r.stderr[-3000:])
