@@ -16,13 +16,16 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     *
-    * Every oracle reference to the embeddings table is rewritten to
-    * read through the admissibility predicate mirroring the engine's
-    * [[graft.core.Tables.embeddings]] quarantine — the oracle runs on
-    * raw parquet views, so without the rewrite a quarantined row
-    * (null / off-dimension / non-finite vector) would appear on the
-    * DuckDB side only. Centralized here so a future vector oracle
-    * can't forget the mirror.
+    * The engine drops inadmissible rows at the scan
+    * ([[graft.core.Tables.embeddings]] for every embeddings read,
+    * [[graft.operators.Multimodal.admissibleDocs]] for the asset
+    * builders), while the oracle runs on raw parquet views. Each oracle
+    * therefore reads those tables through an admissibility CTE
+    * ([[withAdmissible]]): every oracle that names `embeddings`, and
+    * every [[MultimodalQueries]] oracle for `documents`. Centralized
+    * here so a future oracle can't forget the mirror. The CTE reads
+    * `main.<table>`: the oracle's views must live in DuckDB's default
+    * `main` schema, which is where `tools/check.py` creates them.
     */
   private[graft] def rawOracles: Map[String, String] =
     CoreQueries.oracles ++ RelationalQueries.oracles ++
@@ -31,132 +34,37 @@ object SparkEntry {
       MultimodalQueries.oracles ++ StreamingQueries.oracles ++
       TpchQueries.oracles ++ LakehouseQueries.oracles ++ SamplingQueries.oracles
 
-  def oracleSql: Map[String, String] =
-    rawOracles.view.mapValues(mirrorEmbeddingsQuarantine).toMap
-
-  /** SQL keywords that can directly follow a table reference — an
-    * identifier in this set is NOT an alias of the embeddings read.
-    */
-  private val postTableKeywords: Set[String] = Set(
-    "where", "group", "order", "having", "join", "on", "left", "right",
-    "inner", "full", "cross", "union", "except", "intersect", "limit",
-    "qualify", "window", "using", "natural", "anti", "semi", "asof",
-    "positional", "when", "then", "else", "end", "and", "or", "not",
-    "offset", "fetch", "tablesample", "pivot", "unpivot", "lateral",
-    // `from` can follow a COLUMN-ref match (`SELECT a, embeddings FROM
-    // …`): consuming it as a candidate alias would blind the scanner
-    // to the very next table reference (r16 fuzzer finding — `join`
-    // was already here for the same reason on the table-ref side)
-    "from")
-
-  /** Matches every table-reference read of `embeddings` — FROM, any
-    * JOIN, and the comma form (with or without surrounding spaces:
-    * the whitespace rides INSIDE the prefix alternative, so `t ,
-    * embeddings` and `t,embeddings` both match) — plus its optional
-    * alias. The trailing lookahead rejects `embeddings.` /
-    * `embeddings(` so a qualified column reference or function call
-    * never matches. The alias group carries a NEGATIVE lookahead over
-    * [[postTableKeywords]] so a clause keyword is never CONSUMED as a
-    * candidate alias: consuming it blinded the scanner to a
-    * table reference immediately after — `FROM embeddings JOIN
-    * embeddings ON …` swallowed the JOIN and left the second read
-    * unquarantined (found by the QuarantineRewriteProperties fuzzer,
-    * r16). With the lookahead, a keyword after a bare ref stays in the
-    * input as the next match's prefix, and group(3), when present, is
-    * always a genuine alias.
-    */
-  private val embeddingsRef = {
-    val kw = postTableKeywords.toSeq.sorted.mkString("|")
-    (s"""(?is)(\\b(?:FROM|JOIN)\\s+|,\\s*)embeddings\\b(?![.(])""" +
-      s"""(\\s+(?:AS\\s+)?(?!(?:$kw)\\b)([A-Za-z_][A-Za-z0-9_]*))?""").r
+  def oracleSql: Map[String, String] = rawOracles.map { case (name, sql) =>
+    val docs =
+      if (!MultimodalQueries.oracles.contains(name)) sql
+      else withAdmissible(sql, "documents", graft.operators.Multimodal.docsAdmissibleSql)
+    // a false positive (a column or word containing the name) only adds
+    // an unused CTE; every read of the table names it, so none is missed
+    name -> (
+      if (!sql.toLowerCase.contains("embeddings")) docs
+      else withAdmissible(docs, "embeddings", graft.core.Tables.embeddingsAdmissibleSql))
   }
 
-  /** Clause keywords that, found first when scanning BACKWARDS from a
-    * comma match at the same paren depth, prove the comma is an
-    * expression list (SELECT list, GROUP/ORDER/PARTITION BY, SET,
-    * VALUES, …) rather than a FROM table list — so `SELECT a,
-    * embeddings` with a COLUMN named embeddings is never rewritten
-    * into a table subquery. `from` proves the opposite; everything
-    * else (aliases, AS, JOIN/ON/USING — which legally precede a
-    * comma that CONTINUES the FROM list — AND/OR inside ON
-    * conditions) keeps the scan going.
+  /** Prepends `table AS (SELECT * FROM main.table WHERE admissible)` to
+    * `sql`'s CTE list — merged into a leading `WITH` / `WITH RECURSIVE`
+    * (any case), else as a new `WITH` — so every unqualified read of
+    * `table` in the statement resolves to the admissible rows. The body
+    * after the prefix is the input verbatim. The CTE's own read is
+    * schema-qualified because an unqualified one would name the CTE
+    * itself (DuckDB: "Circular reference to CTE").
     */
-  private val exprListKeywords: Set[String] = Set(
-    "select", "where", "by", "having", "when", "then", "else", "set",
-    "values", "limit", "offset", "over", "qualify", "returning", "in",
-    "case", "distinct", "all")
-
-  /** True iff position `pos` (the start of a `, embeddings` match)
-    * sits in a FROM-clause table list. Scans backwards tracking
-    * single-quote parity (string literals are opaque) and paren
-    * depth: identifiers are inspected only at depth 0 relative to the
-    * match; hitting the enclosing `(` before any deciding keyword
-    * means the comma lives in a parenthesized expression list
-    * (function args, IN list, row constructor) — not a table list.
-    */
-  private[graft] def inFromTableList(sql: String, pos: Int): Boolean = {
-    // pre-compute string-literal parity up to each index so the
-    // backward scan can skip literal content (quotes pair up; the ''
-    // escape toggles twice, leaving parity consistent)
-    var i = pos - 1
-    var depth = 0
-    val word = new StringBuilder
-    def flush(): Option[Boolean] = {
-      if (word.isEmpty) return None
-      val w = word.reverse.toString.toLowerCase
-      word.clear()
-      if (w == "from") Some(true)
-      else if (exprListKeywords.contains(w)) Some(false)
+  private[graft] def withAdmissible(sql: String, table: String, admissible: String): String = {
+    val cte = s"$table AS (SELECT * FROM main.$table WHERE $admissible)"
+    def afterKeyword(s: String, kw: String): Option[String] =
+      if (s.regionMatches(true, 0, kw, 0, kw.length) && s.lift(kw.length).exists(_.isWhitespace))
+        Some(s.drop(kw.length).dropWhile(_.isWhitespace))
       else None
+    afterKeyword(sql.dropWhile(_.isWhitespace), "WITH") match {
+      case None => s"WITH $cte\n$sql"
+      case Some(rest) => afterKeyword(rest, "RECURSIVE") match {
+        case Some(ctes) => s"WITH RECURSIVE $cte,\n$ctes"
+        case None => s"WITH $cte,\n$rest"
+      }
     }
-    while (i >= 0) {
-      val c = sql.charAt(i)
-      if (c == '\'') {
-        flush() match { case Some(v) => return v; case None => }
-        // skip the literal: scan to its opening quote (handles the
-        // doubled-quote escape by landing on a quote and re-entering)
-        i -= 1
-        while (i >= 0 && sql.charAt(i) != '\'') i -= 1
-      } else if (depth == 0 && (c.isLetterOrDigit || c == '_')) {
-        word.append(c)
-      } else {
-        flush() match { case Some(v) => return v; case None => }
-        if (c == ')') depth += 1
-        else if (c == '(') {
-          if (depth == 0) return false // enclosing paren: expr list
-          depth -= 1
-        }
-      }
-      i -= 1
-    }
-    flush().getOrElse(false)
-  }
-
-  private[graft] def mirrorEmbeddingsQuarantine(sql: String): String = {
-    val sub = s"(SELECT * FROM embeddings WHERE ${graft.core.Tables.embeddingsAdmissibleSql})"
-    // Rewrite on table-reference boundaries (FROM / JOIN / comma), not
-    // raw text: a `JOIN embeddings e` read must hit the quarantine just
-    // like `FROM embeddings`, or a corrupt row entering through the
-    // join side silently diverges from the engine. Aliased reads keep
-    // their alias; bare reads keep the table name as the subquery
-    // alias so column references resolve unchanged. The comma form is
-    // additionally context-gated: a comma-preceded `embeddings` in a
-    // SELECT list / GROUP BY / function args is a COLUMN reference and
-    // must pass through untouched ([[inFromTableList]]).
-    embeddingsRef.replaceAllIn(sql, m => {
-      val prefix = m.group(1)
-      if (prefix.startsWith(",") && !inFromTableList(sql, m.start))
-        scala.util.matching.Regex.quoteReplacement(m.matched)
-      else {
-      // group(3) present ⟺ a genuine alias (the regex's negative
-      // lookahead already excluded clause keywords); bare reads keep
-      // the table name as the subquery alias
-      val tail = Option(m.group(3)) match {
-        case Some(_) => m.group(2) // genuine alias: keep it verbatim
-        case None    => " embeddings"
-      }
-      scala.util.matching.Regex.quoteReplacement(s"$prefix$sub$tail")
-      }
-    })
   }
 }

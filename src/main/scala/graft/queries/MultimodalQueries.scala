@@ -202,19 +202,11 @@ object MultimodalQueries {
       |  FROM a LEFT JOIN h ON a.doc_id = h.doc_id
       |)""".stripMargin
 
-  /** Every oracle read of `documents` is rewritten through the asset
-    * builders' admissibility quarantine ([[graft.operators.Multimodal
-    * .admissibleDocs]]): the oracle runs on raw parquet views, so
-    * without the mirror a quarantined doc (null text, multi-byte body)
-    * would appear on the DuckDB side only. Centralized here so a
-    * future mm oracle can't forget it.
+  /** Read `documents` through the asset builders' admissibility
+    * quarantine ([[graft.operators.Multimodal.admissibleDocs]]): the
+    * CTE that [[graft.SparkEntry.oracleSql]] prepends to each of these.
     */
-  lazy val oracles: Map[String, String] = rawOracles.view.mapValues(sql =>
-    sql.replace("FROM documents",
-      "FROM (SELECT * FROM documents WHERE " +
-        graft.operators.Multimodal.docsAdmissibleSql + ") documents")).toMap
-
-  private val rawOracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = Map(
     "mm_decode_features" ->
       s"""SELECT doc_id AS asset_id,
         |  $mediaSql AS media_type,

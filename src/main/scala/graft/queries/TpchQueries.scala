@@ -528,7 +528,8 @@ object TpchQueries {
     // for the year, then a semi join onto one nation's suppliers.
     "tpch_q20_excess_stock" -> ((spark, dir) => {
       // only '%bolt%' parts can reach the IN-subquery — synthesize
-      // from the name-filtered part side
+      // from the name-filtered part side, so the subquery needs no
+      // join back to part
       partsuppFrom(
         Tables.part(spark, dir).where(col("p_name").like("%bolt%")),
         Tables.supplier(spark, dir))
@@ -540,26 +541,22 @@ object TpchQueries {
       spark.sql(
         """WITH shipped AS (
           |  -- bolt-part semi-join BELOW the aggregate (guide §3.2):
-          |  -- only '%bolt%' partkeys can reach the IN-subquery's
-          |  -- ps ⋈ part join, and qty is per (partkey, suppkey), so
-          |  -- pre-filtering cannot change any surviving group's sum.
-          |  -- The broadcast semi-join shrinks the aggregate's input
-          |  -- and its (partkey, suppkey) exchange to the bolt slice
-          |  -- (~1/12 of lineitem) instead of the full ship-year.
-          |  -- Spark's constraint inference also copies this IN
-          |  -- predicate through l_partkey = ps_partkey onto the ps_q20
-          |  -- side, as a second bolt semi-join on the part scan that
-          |  -- partsuppFrom reads. The plan therefore carries TWO bolt
-          |  -- semi-joins, not one: the pre-filter adds two broadcast
-          |  -- joins and two scans to q20's docs/PLAN_MANIFEST.tsv row
-          |  -- (bhj 4 -> 6, scan 6 -> 8; nodes 79 and 97 of
+          |  -- ps_q20 holds only '%bolt%' partkeys and qty is per
+          |  -- (partkey, suppkey), so pre-filtering cannot change any
+          |  -- surviving group's sum. The broadcast semi-join shrinks
+          |  -- the aggregate's input and its (partkey, suppkey)
+          |  -- exchange to the bolt slice (~1/12 of lineitem) instead
+          |  -- of the full ship-year. It is written as a LEFT SEMI
+          |  -- JOIN, not `l_partkey IN (subquery)`: constraint
+          |  -- inference copies an IN predicate through l_partkey =
+          |  -- ps_partkey onto ps_q20 as a second semi-join on part,
+          |  -- which can remove no row there (node 79 of
           |  -- plans/r17/tpch_q20_excess_stock_after.txt).
           |  SELECT l_partkey, l_suppkey, sum(l_quantity) AS qty
-          |  FROM li_q20
+          |  FROM li_q20 LEFT SEMI JOIN part_q20
+          |    ON l_partkey = p_partkey AND p_name LIKE '%bolt%'
           |  WHERE CAST(l_shipdate AS DATE) >= DATE '1996-01-01'
           |    AND CAST(l_shipdate AS DATE) < DATE '1997-01-01'
-          |    AND l_partkey IN
-          |      (SELECT p_partkey FROM part_q20 WHERE p_name LIKE '%bolt%')
           |  GROUP BY 1, 2
           |)
           |SELECT s_suppkey, s_name
@@ -567,9 +564,8 @@ object TpchQueries {
           |WHERE n_name = 'NATION_3' AND s_suppkey IN (
           |  SELECT ps_suppkey
           |  FROM ps_q20
-          |  JOIN part_q20 ON p_partkey = ps_partkey
           |  JOIN shipped ON l_partkey = ps_partkey AND l_suppkey = ps_suppkey
-          |  WHERE p_name LIKE '%bolt%' AND ps_availqty > 0.5 * qty
+          |  WHERE ps_availqty > 0.5 * qty
           |)
           |ORDER BY s_name""".stripMargin)
     }),

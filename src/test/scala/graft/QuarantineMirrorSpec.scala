@@ -2,48 +2,46 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins [[SparkEntry.mirrorEmbeddingsQuarantine]]'s table-reference
-  * boundary detection — in particular the comma form's FROM-list
-  * context gate (advice r13: a SELECT-list / GROUP-BY / function-arg
-  * reference to a COLUMN named `embeddings` must never be rewritten
-  * into a table subquery, which would corrupt the oracle SQL).
+/** Pins [[SparkEntry.withAdmissible]], the one way an oracle mirrors
+  * the engine's scan quarantines: an admissibility CTE named after the
+  * table, placed ahead of the statement's own CTEs, with the statement
+  * itself passed through byte-identical. DuckDB resolves every TABLE
+  * reference of `embeddings` (FROM, JOIN, comma form, subqueries) to the
+  * CTE; column references, qualified refs, calls and literals are
+  * untouched text.
   */
 class QuarantineMirrorSpec extends AnyFunSuite {
 
-  private def mirrored(sql: String) = SparkEntry.mirrorEmbeddingsQuarantine(sql)
-  private val Sub = "(SELECT * FROM embeddings WHERE"
+  private val Cte = "embeddings AS (SELECT * FROM main.embeddings WHERE " +
+    graft.core.Tables.embeddingsAdmissibleSql + ")"
+  private val DocsCte = "documents AS (SELECT * FROM main.documents WHERE " +
+    graft.operators.Multimodal.docsAdmissibleSql + ")"
+  private def quarantined(sql: String) =
+    SparkEntry.withAdmissible(sql, "embeddings", graft.core.Tables.embeddingsAdmissibleSql)
+
+  /** A statement with no CTE of its own gains a leading WITH and
+    * otherwise stays byte-identical.
+    */
+  private def assertPlain(sql: String): Unit =
+    assert(quarantined(sql) === s"WITH $Cte\n$sql", sql)
 
   test("FROM / JOIN / FROM-list-comma reads are rewritten, alias kept") {
-    assert(mirrored("SELECT vec_id FROM embeddings").contains(Sub))
-    assert(mirrored("SELECT e.vec_id FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id")
-      .contains(Sub + " ") || mirrored("JOIN embeddings e").contains(Sub))
-    val aliased = mirrored("SELECT x FROM t, embeddings e WHERE t.id = e.vec_id")
-    assert(aliased.contains(Sub) && aliased.contains(") e WHERE"), aliased)
-    val asAlias = mirrored("SELECT x FROM embeddings AS em")
-    assert(asAlias.contains(Sub) && asAlias.contains("AS em"), asAlias)
-    // bare read keeps the table name as the subquery alias
-    val bare = mirrored("SELECT count(*) FROM t, embeddings")
-    assert(bare.contains(Sub) && bare.contains(") embeddings"), bare)
-    // comma form continuing a FROM clause past a JOIN...ON still rewrites
-    val afterOn = mirrored(
-      "SELECT 1 FROM a JOIN b ON a.x = b.x, embeddings WHERE a.y = vec_id")
-    assert(afterOn.contains(Sub), afterOn)
-    // subquery-closing paren before the comma is still a table list
-    val afterSub = mirrored("SELECT 1 FROM (SELECT 1 AS z) q, embeddings")
-    assert(afterSub.contains(Sub), afterSub)
-    // a BARE read immediately followed by another JOIN read: the JOIN
-    // keyword must not be consumed as a candidate alias, or the second
-    // reference goes unquarantined (r16 fuzzer finding — the alias
-    // group's negative keyword lookahead pins this)
-    val selfJoin = mirrored("SELECT 1 FROM embeddings JOIN embeddings ON a = b")
-    assert("\\(SELECT \\* FROM embeddings WHERE".r
-      .findAllIn(selfJoin).size === 2, selfJoin)
-    assert(selfJoin.contains(") embeddings JOIN (") &&
-      selfJoin.contains(") embeddings ON a = b"), selfJoin)
+    Seq(
+      "SELECT vec_id FROM embeddings",
+      "SELECT e.vec_id FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id",
+      "SELECT x FROM t, embeddings e WHERE t.id = e.vec_id",
+      "SELECT x FROM embeddings AS em",
+      "SELECT count(*) FROM t, embeddings",
+      "SELECT count(*) FROM t,embeddings",
+      "SELECT 1 FROM a JOIN b ON a.x = b.x, embeddings WHERE a.y = vec_id",
+      "SELECT 1 FROM (SELECT 1 AS z) q, embeddings",
+      "SELECT 1 FROM embeddings JOIN embeddings ON a = b",
+      "SELECT (SELECT max(a) FROM embeddings) FROM t"
+    ).foreach(assertPlain)
   }
 
   test("comma-preceded COLUMN references named embeddings pass through") {
-    val cases = Seq(
+    Seq(
       "SELECT a, embeddings FROM t",
       "SELECT a, embeddings AS e2 FROM t",
       "SELECT sum(x) FROM t GROUP BY a, embeddings",
@@ -51,46 +49,70 @@ class QuarantineMirrorSpec extends AnyFunSuite {
       "SELECT coalesce(a, embeddings) FROM t",
       "SELECT row_number() OVER (PARTITION BY a, embeddings ORDER BY b) FROM t",
       "SELECT CASE WHEN x THEN a ELSE b END, embeddings FROM t",
-      "SELECT x FROM t WHERE y IN (a, embeddings)")
-    cases.foreach { sql =>
-      assert(mirrored(sql) === sql, s"must not rewrite column ref in: $sql")
-    }
+      "SELECT x FROM t WHERE y IN (a, embeddings)"
+    ).foreach(assertPlain)
   }
 
   test("qualified columns / function calls / string literals never match") {
-    val cases = Seq(
-      "SELECT embeddings.vec_id FROM t",       // qualified: lookahead
-      "SELECT embeddings(x) FROM t",           // call: lookahead
-      "SELECT 'FROM embeddings in a literal, embeddings too' AS s FROM t")
-    // the literal case: the comma inside the string precedes an
-    // `embeddings` token; parity-aware backward scan must not treat
-    // literal content as clause keywords. The FROM alternative inside
-    // a literal DOES still regex-match (the regex is not
-    // literal-aware), so assert only that the comma form is inert.
-    assert(mirrored(cases(0)) === cases(0))
-    assert(mirrored(cases(1)) === cases(1))
-    assert(!mirrored(cases(2)).contains(", " + Sub), mirrored(cases(2)))
+    Seq(
+      "SELECT embeddings.vec_id FROM t",
+      "SELECT embeddings(x) FROM t",
+      "SELECT 'FROM embeddings in a literal, embeddings too' AS s FROM t",
+      "SELECT 'it''s, embeddings' AS s FROM embeddings"
+    ).foreach(assertPlain)
   }
 
-  test("every comma-embeddings occurrence in the real oracles is a table read") {
-    // the context gate SKIPS non-FROM-list commas; this asserts the
-    // skip never silently drops a genuine embeddings table read in
-    // the shipping oracle inventory (the failure mode the gate's
-    // conservatism could hide)
-    val ref = """(?is)(,\s*)embeddings\b(?![.(])""".r
-    for ((name, sql) <- SparkEntry.rawOracles;
-         m <- ref.findAllMatchIn(sql)) {
-      assert(SparkEntry.inFromTableList(sql, m.start),
-        s"oracle $name has a comma-preceded embeddings outside a FROM list " +
-          s"at char ${m.start} — if it is a column, rename it; if a table " +
-          "read, the context gate just missed it")
+  test("the CTE merges into a leading WITH, WITH RECURSIVE or lower-case with") {
+    val body = "r AS (SELECT 1 AS n) SELECT n FROM r, embeddings"
+    assert(quarantined(s"WITH $body") === s"WITH $Cte,\n$body")
+    assert(quarantined(s"with\n  $body") === s"WITH $Cte,\n$body")
+    assert(quarantined(s"  With $body") === s"WITH $Cte,\n$body")
+    assert(quarantined(s"WITH RECURSIVE $body") === s"WITH RECURSIVE $Cte,\n$body")
+    assert(quarantined(s"with recursive\n$body") === s"WITH RECURSIVE $Cte,\n$body")
+    // a name that merely starts with the keyword is not the keyword
+    val withy = "SELECT * FROM without_rows"
+    assert(quarantined(withy) === s"WITH $Cte\n$withy")
+    // a second table merges ahead of the first; both reach every CTE
+    val both = SparkEntry.withAdmissible(quarantined(s"WITH RECURSIVE $body"),
+      "documents", graft.operators.Multimodal.docsAdmissibleSql)
+    assert(both === s"WITH RECURSIVE $DocsCte,\n$Cte,\n$body")
+  }
+
+  test("every shipping oracle that names embeddings or is multimodal carries its CTE") {
+    val mm = graft.queries.MultimodalQueries.oracles.keySet
+    assert(mm.nonEmpty)
+    val quarantinedOracles = SparkEntry.oracleSql
+    assert(quarantinedOracles.keySet === SparkEntry.rawOracles.keySet)
+    var embeddingReaders = 0
+    for ((name, raw) <- SparkEntry.rawOracles) {
+      val got = quarantinedOracles(name)
+      val ctes = Seq(
+        raw.toLowerCase.contains("embeddings") -> Cte,
+        mm.contains(name) -> DocsCte).collect { case (true, c) => c }
+      if (ctes.contains(Cte)) embeddingReaders += 1
+      if (ctes.isEmpty) assert(got === raw, name)
+      else {
+        val recursive = raw.trim.toLowerCase.startsWith("with recursive")
+        val head = (if (recursive) "WITH RECURSIVE " else "WITH ") + ctes.mkString(",\n")
+        assert(got.startsWith(head), s"oracle $name lacks its admissibility CTE")
+        // after the prefix comes the raw oracle verbatim, less only a
+        // leading WITH [RECURSIVE] that the prefix now carries
+        val tail = got.substring(head.length)
+        if (tail.startsWith("\n")) assert(tail.tail === raw, name)
+        else {
+          val rest = tail.stripPrefix(",\n")
+          assert(tail.startsWith(",\n") && raw.endsWith(rest), name)
+          val keyword = raw.dropRight(rest.length).trim.toLowerCase.split("\\s+").mkString(" ")
+          assert(keyword === (if (recursive) "with recursive" else "with"), name)
+        }
+      }
     }
-    // and the mirror itself must have rewritten every FROM/JOIN read:
-    // after mirroring, any remaining `FROM embeddings` token is the
-    // quarantine subquery's own (always followed by WHERE)
-    val raw = """(?is)\b(FROM|JOIN)\s+embeddings\b(?![.(])(?!\s+WHERE\b)""".r
-    for ((name, sql) <- SparkEntry.oracleSql; m <- raw.findAllMatchIn(sql))
-      fail(s"oracle $name kept an unquarantined embeddings read: " +
-        sql.substring(m.start, math.min(sql.length, m.start + 60)))
+    assert(embeddingReaders > 0)
+  }
+
+  test("no raw oracle reads main.embeddings or main.documents past the CTE") {
+    for ((name, raw) <- SparkEntry.rawOracles; t <- Seq("main.embeddings", "main.documents"))
+      assert(!raw.toLowerCase.contains(t),
+        s"oracle $name reads $t, which bypasses the admissibility CTE")
   }
 }

@@ -3,121 +3,95 @@ package graft
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 
-/** Generator-composed differential for the embeddings-quarantine
-  * oracle rewrite (verdict r15 item 7): QuarantineMirrorSpec pins
-  * curated forms; this suite COMPOSES random SELECT/FROM/JOIN/IN/
-  * CASE/OVER shapes with `embeddings` appearing as both a TABLE
-  * reference and a COLUMN reference, and asserts rewrite-iff-
-  * table-reference. Each fragment generator carries its own expected
-  * rendering (built from the documented contract: table refs read
-  * through the admissibility subquery keeping their alias — or
-  * gaining the table name as alias when bare; column refs, qualified
-  * refs, function calls, IN lists, and window/CASE expressions pass
-  * through byte-identical), so the property is an input/expected
-  * differential over the full composed statement, not a reimplementation
-  * of the backward scanner.
+/** Generator-composed differential for the oracle-side quarantine
+  * ([[SparkEntry.withAdmissible]]): QuarantineMirrorSpec pins curated
+  * forms; this suite COMPOSES random SELECT/FROM/JOIN/IN/CASE/OVER
+  * shapes, with `embeddings` appearing as both a TABLE reference and a
+  * COLUMN reference, under an optional leading `WITH` / `WITH
+  * RECURSIVE` list in mixed case. The admissibility CTE binds exactly
+  * the table references (DuckDB name resolution), so the property is
+  * that the prefix lands in the right place and everything else of the
+  * statement is byte-identical: the expected rendering is assembled from
+  * the generated parts, not from the helper's own logic.
   */
 object QuarantineRewriteProperties extends Properties("QuarantineRewrite") {
 
-  private val sub =
-    s"(SELECT * FROM embeddings WHERE ${graft.core.Tables.embeddingsAdmissibleSql})"
-
-  /** A SQL fragment with its expected post-rewrite rendering. */
-  private case class Frag(in: String, out: String)
-  private def same(s: String) = Frag(s, s)
+  private val cte = "embeddings AS (SELECT * FROM main.embeddings WHERE " +
+    s"${graft.core.Tables.embeddingsAdmissibleSql})"
 
   private val ident: Gen[String] = Gen.oneOf("a", "b2", "val3", "x_y")
 
-  /** SELECT-list items — every `embeddings` here is a COLUMN use and
-    * must survive the rewrite untouched.
+  /** SELECT-list items: column uses of `embeddings`, plus a subquery
+    * whose FROM read is a table reference.
     */
-  private val selItem: Gen[Frag] = Gen.oneOf(
-    ident.map(same),
-    Gen.const(same("embeddings")), // bare column ref (comma-gated path)
-    ident.map(i => same(s"embeddings.$i")), // qualified ref (lookahead path)
-    Gen.const(same("embeddings(1)")), // function call (lookahead path)
-    ident.map(i => same(s"f($i, embeddings)")), // function args
-    ident.map(i => same(s"CASE WHEN $i > 0 THEN embeddings ELSE 0 END")),
-    ident.map(i => same(s"$i IN (1, embeddings)")), // IN value list
-    Gen.const(same("'str, with comma'")), // literal holding a comma
-    ident.map(i => same(s"sum($i) OVER (PARTITION BY $i, embeddings)")),
-    // subquery in the select list: its FROM read IS a table reference
-    ident.map(i => Frag(s"(SELECT max($i) FROM embeddings)",
-      s"(SELECT max($i) FROM $sub embeddings)")))
+  private val selItem: Gen[String] = Gen.oneOf(
+    ident,
+    Gen.const("embeddings"),
+    ident.map(i => s"embeddings.$i"),
+    Gen.const("embeddings(1)"),
+    ident.map(i => s"f($i, embeddings)"),
+    ident.map(i => s"CASE WHEN $i > 0 THEN embeddings ELSE 0 END"),
+    ident.map(i => s"$i IN (1, embeddings)"),
+    Gen.const("'str, with comma'"),
+    ident.map(i => s"sum($i) OVER (PARTITION BY $i, embeddings)"),
+    ident.map(i => s"(SELECT max($i) FROM embeddings)"))
 
-  /** FROM-list items — every bare/aliased `embeddings` here is a TABLE
-    * reference and must read through the quarantine subquery.
-    */
-  private val fromItem: Gen[Frag] = Gen.oneOf(
-    Gen.oneOf("t1", "t2", "docs").map(same),
-    Gen.const(Frag("embeddings", s"$sub embeddings")),
-    Gen.oneOf("e", "emb").map(a => Frag(s"embeddings $a", s"$sub $a")),
-    Gen.const(Frag("embeddings AS ali", s"$sub AS ali")),
-    Gen.const(Frag("(SELECT x FROM embeddings) q",
-      s"(SELECT x FROM $sub embeddings) q")))
+  /** FROM-list items: table references, bare or aliased. */
+  private val fromItem: Gen[String] = Gen.oneOf(
+    Gen.oneOf("t1", "t2", "docs"),
+    Gen.const("embeddings"),
+    Gen.oneOf("embeddings e", "embeddings emb", "embeddings AS ali"),
+    Gen.const("(SELECT x FROM embeddings) q"))
 
-  /** Comma separators with the whitespace shapes the prefix
-    * alternative must absorb (spaces on either side, or none).
-    */
   private val sepG: Gen[String] = Gen.oneOf(", ", ",", " , ", ",  ")
 
-  private val joinClause: Gen[Frag] = Gen.oneOf(
-    Gen.const(same("")),
-    Gen.const(Frag(" JOIN embeddings ON a = b",
-      s" JOIN $sub embeddings ON a = b")),
-    Gen.const(Frag(" LEFT JOIN embeddings x ON a = x.v",
-      s" LEFT JOIN $sub x ON a = x.v")),
-    Gen.const(Frag(" CROSS JOIN embeddings",
-      s" CROSS JOIN $sub embeddings")),
-    // FROM-list continuation AFTER an ON condition: the backward scan
-    // must keep going through AND/ON/JOIN back to FROM
-    Gen.const(Frag(" JOIN t2 ON t2.k = a AND b = 1, embeddings",
-      s" JOIN t2 ON t2.k = a AND b = 1, $sub embeddings")))
+  private val joinClause: Gen[String] = Gen.oneOf(
+    "", " JOIN embeddings ON a = b", " LEFT JOIN embeddings x ON a = x.v",
+    " CROSS JOIN embeddings", " JOIN t2 ON t2.k = a AND b = 1, embeddings")
 
-  private val whereClause: Gen[Frag] = Gen.oneOf(
-    same(""), same(" WHERE x IN (a, embeddings)"), same(" WHERE a > 0"))
+  private val whereClause: Gen[String] =
+    Gen.oneOf("", " WHERE x IN (a, embeddings)", " WHERE a > 0")
 
-  private val tailClause: Gen[Frag] = Gen.oneOf(
-    same(""), same(" GROUP BY a, embeddings"), same(" ORDER BY b, embeddings"))
+  private val tailClause: Gen[String] =
+    Gen.oneOf("", " GROUP BY a, embeddings", " ORDER BY b, embeddings")
 
-  /** Join fragments with per-position separators, tracking input and
-    * expected renderings in lockstep.
-    */
-  private def zip(items: List[Frag], seps: List[String]): Frag = Frag(
-    items.head.in + seps.zip(items.tail).map { case (s, f) => s + f.in }.mkString,
-    items.head.out + seps.zip(items.tail).map { case (s, f) => s + f.out }.mkString)
+  private def list(item: Gen[String]): Gen[String] = for {
+    n <- Gen.choose(1, 3)
+    items <- Gen.listOfN(n, item)
+    seps <- Gen.listOfN(n - 1, sepG)
+  } yield items.head + seps.zip(items.tail).map { case (s, i) => s + i }.mkString
 
-  private val query: Gen[Frag] = for {
-    nSel <- Gen.choose(1, 3)
-    sels <- Gen.listOfN(nSel, selItem)
-    selSeps <- Gen.listOfN(math.max(nSel - 1, 0), sepG)
-    nFrom <- Gen.choose(1, 3)
-    froms <- Gen.listOfN(nFrom, fromItem)
-    fromSeps <- Gen.listOfN(math.max(nFrom - 1, 0), sepG)
+  private val statement: Gen[String] = for {
+    s <- list(selItem)
+    f <- list(fromItem)
     jc <- joinClause
     wc <- whereClause
     tc <- tailClause
-  } yield {
-    val s = zip(sels, selSeps)
-    val f = zip(froms, fromSeps)
-    Frag(s"SELECT ${s.in} FROM ${f.in}${jc.in}${wc.in}${tc.in}",
-      s"SELECT ${s.out} FROM ${f.out}${jc.out}${wc.out}${tc.out}")
-  }
+  } yield s"SELECT $s FROM $f$jc$wc$tc"
+
+  /** (leading keyword as written, canonical keyword or "" for none,
+    * the statement's own CTE list).
+    */
+  private val head: Gen[(String, String, String)] = Gen.oneOf(
+    ("", "", ""),
+    ("\n  ", "", ""),
+    ("WITH ", "WITH", "t1 AS (SELECT 1 AS a) "),
+    ("with\n", "WITH", "t1 AS (SELECT 1 AS a),\nt2 AS (SELECT * FROM embeddings) "),
+    ("WITH RECURSIVE ", "WITH RECURSIVE",
+      "r(n) AS (SELECT 1 UNION ALL SELECT n + 1 FROM r WHERE n < 3) "),
+    ("  With Recursive\n\t", "WITH RECURSIVE",
+      "r(n) AS (SELECT 1 UNION ALL SELECT n + 1 FROM r, embeddings WHERE n < 3) "))
 
   property("rewrite-iff-table-reference over composed statements") =
-    forAll(query) { q =>
-      val got = SparkEntry.mirrorEmbeddingsQuarantine(q.in)
-      if (got != q.out) {
-        println(s"input:    ${q.in}\nexpected: ${q.out}\ngot:      $got")
-      }
-      got == q.out
-    }
-
-  property("statements with no embeddings table reference are byte-identical") =
-    forAll(query) { q =>
-      // strip every table-ref fragment by rebuilding from column-only
-      // shapes: a statement whose embeddings are all column uses must
-      // round-trip unchanged
-      q.in != q.out || SparkEntry.mirrorEmbeddingsQuarantine(q.in) == q.in
+    forAll(head, statement) { case ((written, keyword, ctes), stmt) =>
+      val in = written + ctes + stmt
+      val expected =
+        if (keyword.isEmpty) s"WITH $cte\n$in"
+        else s"$keyword $cte,\n$ctes$stmt"
+      val got = SparkEntry.withAdmissible(in, "embeddings",
+        graft.core.Tables.embeddingsAdmissibleSql)
+      if (got != expected)
+        println(s"input:    $in\nexpected: $expected\ngot:      $got")
+      got == expected
     }
 }

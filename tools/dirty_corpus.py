@@ -4,17 +4,18 @@
 Usage: python3 tools/dirty_corpus.py [src_sf_dir] [dst_root]
        (defaults: /root/testdata/sf0.001  /tmp/dirty_gates)
 
-Builds FIVE corpora under <dst_root>/{events,embeddings,star,docs,all}
+Builds SIX corpora under <dst_root>/{events,embeddings,star,docs,all,fuzz}
 — one per tier, each a full copy of the clean sf dir with that tier's
 table(s) replaced by clean-rows + appended pathological rows, plus
-`all` with EVERY dirty table at once (cross-tier interactions). The
-parity claim
+`all` with EVERY dirty table at once (cross-tier interactions) and
+`fuzz` with seeded-random pathology at volume. The parity claim
 (docs/NOTES.md "cross-engine parity ON dirty data") is then one
 command per corpus:
 
     python3 tools/check.py <dst_root>/events /tmp/verify_dirty_events
 
-Expected: `244 pass, 0 fail` on every corpus (count tracks the query inventory). Pathological surface per
+Expected: `N pass, 0 fail` on every corpus, where N is the number of
+entries in `SparkEntry.oracleSql` (249 today). Pathological surface per
 tier:
   events:     null ts / null type / NaN / ±Inf / negative value /
               null + non-JSON + type-mismatched props
