@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import scala.collection.mutable
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import graft.expressions.VectorKernels
 
 /** Corpus-scale, integer-exact k-means over an embedding column — the
   * clustering stage of a semantic-curation pipeline (SemDeDup-style
@@ -20,66 +24,34 @@ import org.apache.spark.sql.functions._
   * both engines' IEEE multiply/floor agree bit for bit), after which
   * every step is BIGINT arithmetic: squared-L2 distances are integer
   * sums, the argmin tie-breaks on the smaller cluster id, and centroid
-  * updates are truncating integer division (`div` here, `//` in the
+  * updates are truncating integer division (Long `/` here, `//` in the
   * DuckDB oracle — both truncate toward zero). k seeds are the k
   * lowest-id vectors (published data-dependent inits like kmeans++
   * need a seeded RNG; an id-ordered seed keeps the contract
   * engine-free). The oracle unrolls the SAME R rounds as chained
   * MATERIALIZED CTEs and matches bit for bit.
   *
-  * Scale shape: assignment is a ZERO-SHUFFLE map — the k·dim centroid
-  * table rides the closure as literal arrays (k ≤ 64 enforced), so
-  * each round's only exchange is the centroid-update aggregation,
-  * whose map-side combine collapses every partition to ≤ k vector
-  * sums ([[LongVecSum]] — elementwise, no per-dimension explode). The
-  * k-row update collects to the driver (the bounded-centroid-pull
-  * pattern of [[Similarity]]). The quantized (id, vector) projection
-  * is lineage-truncated ONCE before the loop, so every Lloyd round
-  * re-scans the compact materialized projection — not the parquet
-  * source — and round cost is independent of how wide the source
-  * table is. (With a reliable checkpoint dir set the blocks live in
-  * fault-tolerant storage; see [[graft.core.GraftSession.truncate]].)
+  * Scale shape: training runs on an RDD of (group, id, quantized
+  * vector) rows, quantized and widened once and persisted for the
+  * whole fit (`lloyd`). One job seeds it; each Lloyd round is then
+  * ONE `treeAggregate` job: every task argmins its rows against the
+  * driver-held centroid table ([[VectorKernels.kmeansArgmin]]) and
+  * folds them into ≤ k vector sums per group, and the driver divides.
+  * No round builds, analyzes or codegens a plan, and no round
+  * shuffles the corpus. Assignment ([[assignToCentroids]],
+  * [[assignToTwoLevel]]) is a ZERO-SHUFFLE projection: the centroid
+  * table rides the plan as one native-expression constant (k ≤ 64
+  * per level).
   */
 object Clustering {
 
   /** Fixed-point scale for embedding coordinates: floor(x·1e4). */
   val QuantScale = 10000L
 
-  /** Elementwise BIGINT vector sum — the map-side-combinable centroid
-    * accumulator. Integer addition commutes, so partial-merge order
-    * cannot perturb the result. Additions are OVERFLOW-CHECKED
-    * (`Math.addExact`): the DuckDB oracle sums into HUGEINT, so a
-    * silent Long wraparound here would diverge from the oracle with no
-    * symptom — instead the job fails loudly with ArithmeticException
-    * and the caller knows the integer envelope was exceeded.
-    */
-  class LongVecSum extends Aggregator[Seq[Long], Array[Long], Seq[Long]] {
-    override def zero: Array[Long] = Array.emptyLongArray
-    private def add(b: Array[Long], a: Seq[Long]): Array[Long] =
-      if (b.isEmpty) a.toArray
-      else {
-        var i = 0
-        while (i < b.length) { b(i) = Math.addExact(b(i), a(i)); i += 1 }
-        b
-      }
-    override def reduce(b: Array[Long], a: Seq[Long]): Array[Long] = add(b, a)
-    override def merge(x: Array[Long], y: Array[Long]): Array[Long] = add(x, y)
-    override def finish(b: Array[Long]): Seq[Long] = b.toSeq
-    override def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-    override def outputEncoder: Encoder[Seq[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-  }
-
   /** floor(x·QuantScale) as BIGINT, computed in double. */
   def quantize(emb: Column): Column =
     transform(emb.cast("array<double>"), x => floor(x * QuantScale.toDouble).cast("long"))
 
-  /** R rounds of (assign, update), then a final assignment against the
-    * converged centroids. Returns one row per input vector:
-    * (idCol, cluster BIGINT, qdist BIGINT) where qdist is the exact
-    * quantized squared L2 distance to the winning centroid.
-    */
   /** Zero-shuffle argmin assignment against driver-held labeled
     * centroids: winner = lexicographic min over (dist, label) — exact
     * integer distances, total tie-break. Input must carry (idC, qC);
@@ -121,63 +93,115 @@ object Clustering {
                       k: Int, rounds: Int): Seq[(Long, Array[Long])] = {
     require(k >= 2 && k <= 64, s"k must be 2..64 (centroids ride the plan as literals), got $k")
     require(rounds >= 1 && rounds <= 20, s"rounds must be 1..20, got $rounds")
-    import graft.core.GraftSession.LineageOps
-    // Materialize the quantized projection once: R Lloyd rounds then
-    // re-scan this compact (id, BIGINT vector) frame instead of
-    // launching R full parquet scans + per-round re-quantization.
-    // WIDENED first (Tables.widen — no-op when the scan already has
-    // shuffle-width partitions, i.e. at lake scale): every round's
-    // k·dim distance work runs map-side against this frame's
-    // partitioning and nothing downstream ever re-spreads it — a
-    // single-row-group parquet source would pin ALL rounds to 1-2
-    // cores (measured 3× end-to-end on the 10× tier at k=64). The
-    // repartition is paid once, behind the checkpoint barrier, so the
-    // returned assignment plan stays a zero-shuffle projection.
-    val q = graft.core.Tables.widen(
-        points.select(col(idCol).as("_km_id"), quantize(col(embCol)).as("_km_q")))
-      .truncateLineage()
-    lloydLoop(q, "_km_id", "_km_q", k, rounds)
+    labeled(persisted(trainingRows(points, idCol, embCol))(
+      lloyd(_, groups = 1, k, rounds, ragged = false))(0))
   }
 
-  /** The bare Lloyd iteration over an ALREADY-quantized, materialized
-    * (idC, qC) frame — shared by the flat and two-level fits so both
-    * run the identical seed/assign/update arithmetic. Callers own the
-    * k/rounds envelope checks and the projection's materialization.
-    */
-  private def lloydLoop(q: DataFrame, idC: String, qC: String,
-                        k: Int, rounds: Int): Seq[(Long, Array[Long])] = {
-    val seeds = q.orderBy(idC).limit(k).collect()
-    require(seeds.length == k, s"need at least $k vectors to seed, got ${seeds.length}")
-    var cents: Array[Array[Long]] = seeds.map(_.getSeq[Long](1).toArray)
+  /** One training row: (fit group, id, quantized vector). */
+  private type Pt = (Int, Long, ArrayData)
 
-    val vecSum = udaf(new LongVecSum)
-    var r = 0
-    while (r < rounds) {
-      // assignment keeps qC so the centroid update aggregates
-      // directly off it (no n-row re-join per round)
-      val upd = argminAssign(q, idC, qC,
-          cents.zipWithIndex.map { case (c, j) => (j.toLong, c) }.toSeq)
-        .groupBy("cluster")
-        .agg(vecSum(col(qC)).as("s"), count(lit(1)).as("cnt"))
-        .select(col("cluster"), expr("transform(s, x -> x div cnt)").as("c"))
-        .collect()
+  private def labeled(cents: Array[Array[Long]]): Seq[(Long, Array[Long])] =
+    cents.toSeq.zipWithIndex.map { case (c, j) => (j.toLong, c) }
+
+  /** The quantized (id, vector) projection as group-0 training rows,
+    * the arrays copied out of the scan's reused rows. WIDENED first
+    * (Tables.widen — no-op when the scan already has shuffle-width
+    * partitions, i.e. at lake scale): every round's k·dim distance
+    * work runs against this partitioning, and a single-row-group
+    * parquet source would pin ALL rounds to 1-2 cores (measured 3×
+    * end-to-end on the 10× tier at k=64).
+    */
+  private def trainingRows(points: DataFrame, idCol: String, embCol: String): RDD[Pt] =
+    graft.core.Tables.widen(points.select(col(idCol).cast("long"), quantize(col(embCol))))
+      .queryExecution.toRdd
+      .map(r => (0, r.getLong(0), if (r.isNullAt(1)) null else r.getArray(1).copy()))
+
+  /** `body` over `rdd` persisted, unpersisted however `body` ends. */
+  private def persisted[A, T](rdd: RDD[A])(body: RDD[A] => T): T = {
+    rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    try body(rdd) finally rdd.unpersist()
+  }
+
+  /** Lloyd's iteration over training rows split into independent fit
+    * groups `0 until groups` — group 0 alone for the flat fit and the
+    * coarse level, the row's coarse cell for the fine level — so both
+    * levels run the identical seed/assign/update arithmetic. One job
+    * seeds every group with its k lowest-id vectors; each round is one
+    * `treeAggregate` job whose partials are ≤ k vector sums per group.
+    * Returns each group's centroid table, label = index. With `ragged`
+    * a group holding fewer than k rows seeds that many centroids and a
+    * group with none stays empty; without it the fit needs k seeds.
+    */
+  private def lloyd(rows: RDD[Pt], groups: Int, k: Int, rounds: Int,
+                    ragged: Boolean): Array[Array[Array[Long]]] = {
+    val seeds = seed(rows, groups, k)
+    require(ragged || seeds.forall(_.length == k),
+      s"need at least $k vectors to seed, got ${seeds.map(_.length).min}")
+    (1 to rounds).foldLeft(seeds) { (cs, _) =>
+      val labels = cs.map(c => Array.tabulate(c.length)(_.toLong))
+      val sums = rows.treeAggregate(new RoundSums(cs.map(_.length)))(
+        (acc, p) => acc.add(p._1, p._3, cs(p._1), labels(p._1)), _.merge(_))
+      require(sums.corrupt == 0,
+        "k-means update saw a null cluster: corrupt vector (null element " +
+          "or dimension mismatch) in the training input")
       // empty clusters keep their previous centroid (mirrored in the
       // oracle's LEFT JOIN + coalesce)
-      val next = cents.map(_.clone())
-      upd.foreach { row =>
-        // a null cluster key means the argmin kernel nulled — a corrupt
-        // vector (null element / dimension mismatch) survived upstream
-        // admissibility; fail as loudly as the overflow path, not with
-        // an opaque NPE at getLong
-        require(!row.isNullAt(0),
-          "k-means update saw a null cluster: corrupt vector (null element " +
-            "or dimension mismatch) in the training input")
-        next(row.getLong(0).toInt) = row.getSeq[Long](1).toArray
-      }
-      cents = next
-      r += 1
+      Array.tabulate(groups)(g => Array.tabulate(cs(g).length) { j =>
+        val n = sums.cnt(g)(j)
+        if (n == 0) cs(g)(j) else sums.sum(g)(j).map(_ / n)
+      })
     }
-    cents.zipWithIndex.map { case (c, j) => (j.toLong, c) }.toSeq
+  }
+
+  /** Each group's k lowest-id vectors, in id order: one
+    * `treeAggregate` job folding rows into a k-bounded max-heap per
+    * group (O(n log k), no sort), so no merge ever holds more than
+    * groups·k vectors. A null vector seeds as a 0-dim centroid, so the
+    * first round rejects its group's rows as corrupt.
+    */
+  private def seed(rows: RDD[Pt], groups: Int, k: Int): Array[Array[Array[Long]]] = {
+    def push(h: mutable.PriorityQueue[(Long, Array[Long])], id: Long, v: => Array[Long]): Unit =
+      if (h.size < k || id < h.head._1) { h.enqueue((id, v)); if (h.size > k) h.dequeue() }
+    val heaps = rows.treeAggregate(Array.fill(groups)(
+        mutable.PriorityQueue.empty(Ordering.by[(Long, Array[Long]), Long](_._1))))(
+      (hs, p) => { push(hs(p._1), p._2, if (p._3 == null) Array.emptyLongArray else p._3.toLongArray()); hs },
+      (a, b) => { a.indices.foreach(g => b(g).foreach(t => push(a(g), t._1, t._2))); a })
+    heaps.map(_.toArray.sortBy(_._1).map(_._2))
+  }
+
+  /** One Lloyd round's partial: per (group, label) the member count
+    * and elementwise member sum (allocated at the first member), plus
+    * the rows the argmin kernel refused — a null winner is a corrupt
+    * vector (null element, dimension mismatch), raised by [[lloyd]].
+    * Sums are OVERFLOW-CHECKED (`Math.addExact`): the DuckDB oracle
+    * sums into HUGEINT, so a silent Long wraparound would diverge from
+    * it with no symptom — instead the job fails with an
+    * ArithmeticException. Integer addition commutes, so merge order
+    * cannot perturb the result.
+    */
+  private final class RoundSums(sizes: Array[Int]) extends Serializable {
+    val cnt: Array[Array[Long]] = sizes.map(new Array[Long](_))
+    val sum: Array[Array[Array[Long]]] = sizes.map(new Array[Array[Long]](_))
+    var corrupt = 0L
+    /** Adds n members of cluster (g, j) whose elementwise sum is x. */
+    private def addInto(g: Int, j: Int, n: Long, dim: Int)(x: Int => Long): Unit = {
+      if (sum(g)(j) == null) sum(g)(j) = new Array[Long](dim)
+      val s = sum(g)(j)
+      var i = 0
+      while (i < dim) { s(i) = Math.addExact(s(i), x(i)); i += 1 }
+      cnt(g)(j) += n
+    }
+    def add(g: Int, q: ArrayData, cents: Array[Array[Long]], labels: Array[Long]): RoundSums = {
+      val w = if (q == null) null else VectorKernels.kmeansArgmin(q, cents, labels)
+      if (w == null) corrupt += 1 else addInto(g, w.getLong(0).toInt, 1, q.numElements())(q.getLong)
+      this
+    }
+    def merge(o: RoundSums): RoundSums = {
+      for (g <- cnt.indices; j <- cnt(g).indices if o.cnt(g)(j) > 0)
+        addInto(g, j, o.cnt(g)(j), o.sum(g)(j).length)(o.sum(g)(j)(_))
+      corrupt += o.corrupt
+      this
+    }
   }
 
   /** Zero-shuffle assignment of arbitrary points to FIXED labeled
@@ -199,42 +223,16 @@ object Clustering {
         keepCols.map(col): _*)
   }
 
+  /** R rounds of (assign, update), then a final assignment against the
+    * converged centroids. Returns one row per input vector:
+    * (idCol, cluster BIGINT, qdist BIGINT) where qdist is the exact
+    * quantized squared L2 distance to the winning centroid.
+    */
   def kmeansFixedPoint(points: DataFrame, idCol: String, embCol: String,
                        k: Int, rounds: Int): DataFrame =
     assignToCentroids(points, idCol, embCol,
       kmeansCentroids(points, idCol, embCol, k, rounds))
 
-  /** Two-level (coarse → fine) k-means: a flat kc-cluster Lloyd fit
-    * partitions the corpus into cells, then an INDEPENDENT kf-cluster
-    * Lloyd fit runs inside every cell simultaneously — one distributed
-    * job per round fits ALL kc fine sub-problems at once (the
-    * assignment is the cell-indexed [[graft.expressions.KmeansArgmin2L]]
-    * kernel; the update is a single (cell, fine) group-by whose
-    * map-side combine collapses each partition to ≤ kc·kf vector
-    * sums). This raises the effective cluster count to kc·kf — up to
-    * 64·64 = 4096 — past [[kmeansFixedPoint]]'s k ≤ 64 literal-
-    * centroid envelope, which is what SemDeDup-style curation needs at
-    * corpus scale: the paper runs k in the tens of thousands, and
-    * cluster sizes (hence the within-cluster quadratic pair join) only
-    * stay flat if k tracks n. Per-row assignment cost is two fused
-    * scans of ≤ 64 centroids (O(kc + kf), not O(kc·kf)); driver state
-    * is ≤ kc·kf centroid vectors (~2 MB at 4096×64 dims) riding the
-    * closure as one constant.
-    *
-    * Fine seeds are the kf lowest-id vectors of each cell (row_number
-    * over the cell partition — the id-ordered flat-seed contract,
-    * per cell); cells with fewer than kf rows seed that many fine
-    * centroids (ragged cells are first-class in the kernel). Empty
-    * fine clusters keep their previous centroid, exactly like the
-    * flat update. Every step is the same BIGINT arithmetic as
-    * [[kmeansCentroids]], so the DuckDB twin (coarse chain → per-cell
-    * seed → unrolled fine rounds) matches bit for bit.
-    *
-    * Returns one row per input vector:
-    * (idCol, cell, fine, cluster = cell·kf + fine, qdist) with qdist
-    * the exact quantized squared-L2 distance to the winning FINE
-    * centroid.
-    */
   /** A trained two-level codebook: labeled coarse centroids plus the
     * per-cell fine centroid table (ragged — a cell seeds at most kf
     * fine centroids, fewer when it holds fewer training rows).
@@ -253,60 +251,22 @@ object Clustering {
     require(kc >= 1 && kc <= 64, s"kc must be 1..64, got $kc")
     require(kf >= 2 && kf <= 64, s"kf must be 2..64, got $kf")
     require(rounds >= 1 && rounds <= 20, s"rounds must be 1..20, got $rounds")
-    import graft.core.GraftSession.LineageOps
-    val q = graft.core.Tables.widen(
-        points.select(col(idCol).as("_k2_id"), quantize(col(embCol)).as("_k2_q")))
-      .truncateLineage()
-    val coarse = lloydLoop(q, "_k2_id", "_k2_q", kc, rounds)
-    // cell assignment materialized once — the fine loop re-scans it
-    // every round, and the coarse argmin must not re-run per round
-    val withCell = argminAssign(q, "_k2_id", "_k2_q", coarse)
-      .select(col("_k2_id"), col("_k2_q"), col("cluster").as("_k2_cell"))
-      .truncateLineage()
-    // kf lowest-id seeds per cell — a bounded pull (≤ kc·kf rows); the
-    // row_number ≤ k filter rides the TopKPerKey physical operator
-    val seedW = org.apache.spark.sql.expressions.Window
-      .partitionBy("_k2_cell").orderBy("_k2_id")
-    val seedRows = withCell
-      .withColumn("_rn", row_number().over(seedW)).where(col("_rn") <= kf)
-      .select(col("_k2_cell"), (col("_rn") - 1).cast("long").as("_fid"), col("_k2_q"))
-      .collect()
-    // ragged per-cell tables: cells the coarse fit left empty stay
-    // empty (no rows can land there, the kernel nulls defensively)
-    val fine: Array[Array[Array[Long]]] = Array.fill(kc)(Array.empty)
-    seedRows.groupBy(_.getLong(0)).foreach { case (cell, rs) =>
-      fine(cell.toInt) = rs.sortBy(_.getLong(1)).map(_.getSeq[Long](2).toArray).toArray
-    }
-    def assign2l(): DataFrame =
-      fineAssign(withCell, "_k2_id", "_k2_q", "_k2_cell", fine)
-    val vecSum = udaf(new LongVecSum)
-    var r = 0
-    while (r < rounds) {
-      // ALL cells' fine updates in one aggregation — ≤ kc·kf result
-      // rows collect to the driver (the bounded-centroid-pull pattern)
-      val upd = assign2l()
-        .groupBy("_k2_cell", "_fid")
-        .agg(vecSum(col("_k2_q")).as("s"), count(lit(1)).as("cnt"))
-        .select(col("_k2_cell"), col("_fid"),
-          expr("transform(s, x -> x div cnt)").as("c"))
-        .collect()
-      upd.foreach { row =>
-        // same loud-failure doctrine as the flat update loop: a null
-        // (cell, fid) key is a corrupt training vector, not a state
-        require(!row.isNullAt(0) && !row.isNullAt(1),
-          "two-level k-means update saw a null (cell, fine) key: corrupt " +
-            "vector (null element or dimension mismatch) in the training input")
-        fine(row.getLong(0).toInt)(row.getLong(1).toInt) =
-          row.getSeq[Long](2).toArray
+    persisted(trainingRows(points, idCol, embCol)) { rows =>
+      val coarse = lloyd(rows, groups = 1, kc, rounds, ragged = false)(0)
+      val labels = coarse.indices.map(_.toLong).toArray
+      // every row passed the coarse rounds' corrupt-vector check, so
+      // its coarse argmin is non-null
+      val cells = rows.map { case (_, id, q) =>
+        (VectorKernels.kmeansArgmin(q, coarse, labels).getLong(0).toInt, id, q)
       }
-      r += 1
+      TwoLevelCodebook(labeled(coarse),
+        persisted(cells)(lloyd(_, groups = kc, kf, rounds, ragged = true)), kf)
     }
-    TwoLevelCodebook(coarse, fine, kf)
   }
 
   /** The fine-level argmin projection over a frame carrying
     * (idC, qC, cellC) — appends (_fid, qdist) via the cell-indexed
-    * kernel; shared by the fit loop and the frozen-codebook path.
+    * kernel (the frozen-codebook path's second level).
     */
   private def fineAssign(frame: DataFrame, idC: String, qC: String,
                          cellC: String,
@@ -362,6 +322,35 @@ object Clustering {
         col("qdist") +: keepCols.map(col): _*)
   }
 
+  /** Two-level (coarse → fine) k-means: a flat kc-cluster Lloyd fit
+    * partitions the corpus into cells, then an INDEPENDENT kf-cluster
+    * Lloyd fit runs inside every cell simultaneously — one distributed
+    * job per round fits ALL kc fine sub-problems at once (each row
+    * argmins against its own cell's fine table, and the round's
+    * partials are ≤ kc·kf vector sums per task). This raises the
+    * effective cluster count to kc·kf — up to 64·64 = 4096 — past
+    * [[kmeansFixedPoint]]'s k ≤ 64 literal-centroid envelope, which is
+    * what SemDeDup-style curation needs at corpus scale: the paper
+    * runs k in the tens of thousands, and cluster sizes (hence the
+    * within-cluster quadratic pair join) only stay flat if k tracks n.
+    * Per-row assignment cost is two fused scans of ≤ 64 centroids
+    * (O(kc + kf), not O(kc·kf)); driver state is ≤ kc·kf centroid
+    * vectors (~2 MB at 4096×64 dims).
+    *
+    * Fine seeds are the kf lowest-id vectors of each cell (the
+    * id-ordered flat-seed contract, per cell); cells with fewer than
+    * kf rows seed that many fine centroids (ragged cells are
+    * first-class in the kernel). Empty fine clusters keep their
+    * previous centroid, exactly like the flat update. Every step is
+    * the same BIGINT arithmetic as [[kmeansCentroids]], so the DuckDB
+    * twin (coarse chain → per-cell seed → unrolled fine rounds)
+    * matches bit for bit.
+    *
+    * Returns one row per input vector:
+    * (idCol, cell, fine, cluster = cell·kf + fine, qdist) with qdist
+    * the exact quantized squared-L2 distance to the winning FINE
+    * centroid.
+    */
   def kmeansTwoLevel(points: DataFrame, idCol: String, embCol: String,
                      kc: Int, kf: Int, rounds: Int): DataFrame =
     assignToTwoLevel(points, idCol, embCol,
@@ -515,6 +504,25 @@ object Clustering {
         (coalesce(col("lbl"), col("_sd_id")) === col("_sd_id")).as("keep"))
   }
 
+  /** One power-iteration round's reduction, exposed as a DataFrame so
+    * its plan shape is pinnable: zero-shuffle projection (per-row dot
+    * with the broadcast direction literal — per-element contributions
+    * are Long-safe at ≤ dim·Q²·1e6), posexplode by dimension index,
+    * then a native DECIMAL(38,0) hash-agg. The partial agg collapses
+    * each partition to dim rows, so the single exchange moves
+    * dim·partitions rows regardless of corpus size, and the 128-bit
+    * sum never overflows (envelope 1e38). Input must carry `_pi_q`.
+    */
+  private[graft] def powerIterationRoundPlan(q: DataFrame, v: Array[Long]): DataFrame = {
+    val vLit = array(v.map(lit(_)): _*)
+    q.withColumn("_s", aggregate(
+        zip_with(col("_pi_q"), vLit, (a, b) => a * b),
+        lit(0L), (acc, y) => acc + y))
+      .select(posexplode(transform(col("_pi_q"), c => c * col("_s"))).as(Seq("j", "_c")))
+      .groupBy("j")
+      .agg(sum(col("_c").cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("w"))
+  }
+
   /** Distributed power iteration for the TOP PRINCIPAL DIRECTION of
     * the (uncentered) embedding Gram matrix — the first step of PCA /
     * spectral methods, covariance-free: each round computes
@@ -542,25 +550,6 @@ object Clustering {
     * after `rounds` iterations (direction, not unit vector: callers
     * normalize in float for reporting only).
     */
-  /** One power-iteration round's reduction, exposed as a DataFrame so
-    * its plan shape is pinnable: zero-shuffle projection (per-row dot
-    * with the broadcast direction literal — per-element contributions
-    * are Long-safe at ≤ dim·Q²·1e6), posexplode by dimension index,
-    * then a native DECIMAL(38,0) hash-agg. The partial agg collapses
-    * each partition to dim rows, so the single exchange moves
-    * dim·partitions rows regardless of corpus size, and the 128-bit
-    * sum never overflows (envelope 1e38). Input must carry `_pi_q`.
-    */
-  private[graft] def powerIterationRoundPlan(q: DataFrame, v: Array[Long]): DataFrame = {
-    val vLit = array(v.map(lit(_)): _*)
-    q.withColumn("_s", aggregate(
-        zip_with(col("_pi_q"), vLit, (a, b) => a * b),
-        lit(0L), (acc, y) => acc + y))
-      .select(posexplode(transform(col("_pi_q"), c => c * col("_s"))).as(Seq("j", "_c")))
-      .groupBy("j")
-      .agg(sum(col("_c").cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("w"))
-  }
-
   def powerIteration(points: DataFrame, embCol: String, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 20, s"rounds must be 1..20, got $rounds")
     import graft.core.GraftSession.LineageOps

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables

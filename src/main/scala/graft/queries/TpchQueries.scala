@@ -19,11 +19,8 @@ object TpchQueries {
     * (s_suppkey ≡ p_partkey mod 4 → |part|·|supplier|/4 rows) and
     * arithmetic cost/availability, reproduced verbatim in the DuckDB
     * oracles so all four stay fully hash-checkable.
-    */
-  private def partsupp(spark: SparkSession, dir: String): DataFrame =
-    partsuppFrom(Tables.part(spark, dir), Tables.supplier(spark, dir))
-
-  /** Synthesis from caller-supplied (possibly PRE-FILTERED) part /
+    *
+    * Synthesized from caller-supplied (possibly PRE-FILTERED) part /
     * supplier sides. partsupp drops every part/supplier attribute, so
     * Catalyst cannot push a q2/q16/q20 part predicate or a q11 nation
     * predicate through the generator join on its own — each row of

@@ -34,8 +34,8 @@ class BoundedCollectRegistrySpec extends AnyFunSuite {
       "single-row scalar aggregate (global count) — 1 row"),
     "operators/Similarity.scala" -> (4,
       "aggregator finish .take(k) per group (k ≤ 64); memoized quantizer training sample (≤ max(nCodes·32, 512) rows); corpus fingerprint scalar agg (1 row); distinct probe cells (≤ nCells ≤ 64)"),
-    "operators/Clustering.scala" -> (8,
-      "Lloyd seeds (≤ k ≤ 64); per-round centroid update (≤ k rows); 2L fine seeds (≤ kc·kf ≤ 4096); 2L fine update (≤ kc·kf); k-center seed (1 row); k-center round argmax (scalar agg); dim probe take(1); power-iteration round (dim rows)"),
+    "operators/Clustering.scala" -> (4,
+      "k-center seed (1 row); k-center round argmax (scalar agg); dim probe take(1); power-iteration round (dim rows); the Lloyd fits' seeds and rounds pull through treeAggregate (≤ kc·kf vectors per merge), which the pattern does not match"),
     "operators/Dedup.scala" -> (1,
       "fixed-point convergence check: scalar sum aggregate (1 row)"),
     "operators/Dsir.scala" -> (1,

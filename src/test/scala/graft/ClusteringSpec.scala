@@ -518,6 +518,122 @@ class ClusteringSpec extends SparkSpec {
     assert(got.toSeq === exact)
   }
 
+  /** Naive driver-side Lloyd fit: the k lowest-id vectors seed (fewer
+    * when there are fewer rows), then `rounds` (assign, update) rounds
+    * with the smaller-label tie-break and truncating division; an empty
+    * cluster keeps its centroid. Returns the centroids and whether any
+    * cluster emptied.
+    */
+  private def naiveLloyd(q: Seq[(Long, Array[Long])], k: Int,
+                         rounds: Int): (Array[Array[Long]], Boolean) = {
+    val byId = q.sortBy(_._1)
+    var cents = byId.take(k).map(_._2.clone()).toArray
+    var emptied = false
+    (1 to rounds).foreach { _ =>
+      val members = byId.groupBy { case (_, v) => naiveNearest(v, cents) }
+      cents = cents.indices.map { j =>
+        members.get(j) match {
+          case Some(ms) =>
+            val s = new Array[Long](cents(j).length)
+            ms.foreach { case (_, v) => v.indices.foreach(i => s(i) += v(i)) }
+            s.map(_ / ms.size)
+          case None => emptied = true; cents(j)
+        }
+      }.toArray
+    }
+    (cents, emptied)
+  }
+
+  private def naiveNearest(v: Array[Long], cents: Array[Array[Long]]): Int =
+    cents.indices.minBy(j => (v.zip(cents(j)).map { case (a, b) => (a - b) * (a - b) }.sum, j))
+
+  test("two-level codebook matches a naive two-level twin: negative " +
+      "coordinates, a ragged cell and a fine cluster that empties") {
+    val rnd = new scala.util.Random(57)
+    def near(c: Seq[Float]) = c.map(x => x + (rnd.nextFloat() - 0.5f) * 2f)
+    val (a, b, c) = (Seq(-6f, -6f, -6f, -6f), Seq(6f, 6f, 6f, 6f), Seq(-6f, 6f, -6f, 6f))
+    // ids 0, 1, 2 seed one coarse cell per blob; in b's cell, ids 33
+    // and 34 are the same vector, so fine label 2 always loses the
+    // tie to label 1 and empties; c's cell holds 3 rows for kf = 4
+    val twin33 = near(b)
+    val vecs: Seq[(Long, Seq[Float])] =
+      Seq(0L -> near(a), 1L -> near(b), 2L -> near(c)) ++
+        (3L to 32L).map(_ -> near(a)) ++
+        Seq(33L -> twin33, 34L -> twin33) ++ (35L to 52L).map(_ -> near(b)) ++
+        Seq(53L -> near(c), 54L -> near(c))
+    val (kc, kf, rounds) = (3, 4, 3)
+    val q = vecs.map { case (id, v) => id -> v.map(x => math.floor(x.toDouble * 10000d).toLong).toArray }
+    val (coarse, _) = naiveLloyd(q, kc, rounds)
+    val fits = (0 until kc).map(cell =>
+      naiveLloyd(q.filter { case (_, v) => naiveNearest(v, coarse) == cell }, kf, rounds))
+    assert(fits.exists(_._1.length < kf), "fixture must hold a ragged cell")
+    assert(fits.exists(_._2), "fixture must empty a fine cluster")
+    val cb = Clustering.kmeansTwoLevelCodebook(mkPoints(vecs), "vec_id", "embedding",
+      kc, kf, rounds)
+    assert(cb.coarse.map(_._1) === (0L until kc.toLong))
+    assert(cb.coarse.map(_._2.toSeq) === coarse.toSeq.map(_.toSeq))
+    assert(cb.fine.map(_.map(_.toSeq).toSeq).toSeq ===
+      fits.map(_._1.map(_.toSeq).toSeq))
+  }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsOf(body: => Any): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.ListenerDrain(sc); n.get }
+    finally sc.removeSparkListener(l)
+  }
+
+  test("each Lloyd round is one job: fits stay within their job budgets") {
+    val rnd = new scala.util.Random(5)
+    val pts = mkPoints((0L until 80L).map(id => id -> Seq.fill(8)((rnd.nextFloat() - 0.5f) * 2f)))
+    // seed + 3 rounds per level, plus at most the widening shuffle
+    val flat = jobsOf(Clustering.kmeansCentroids(pts, "vec_id", "embedding", k = 4, rounds = 3))
+    val twoLevel = jobsOf(Clustering.kmeansTwoLevelCodebook(pts, "vec_id", "embedding",
+      kc = 4, kf = 4, rounds = 3))
+    val counts = s"jobs: kmeansCentroids $flat, kmeansTwoLevelCodebook $twoLevel"
+    info(counts)
+    assert(flat <= 6, counts)
+    assert(twoLevel <= 10, counts)
+  }
+
+  test("fits leave no persisted RDD behind, and a corrupt training vector " +
+      "fails both fits with the null-cluster message") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType, containsNull = true))))
+    def pts(bad: Seq[java.lang.Float]) = spark.createDataFrame(
+      java.util.Arrays.asList((0L until 12L).map(id =>
+        Row(id, if (id == 5L) bad else Seq[java.lang.Float](id * 0.1f, -id * 0.2f))): _*),
+      schema)
+    // earlier suites' RDDs may be cleaned meanwhile: pin "none added"
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def added = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    val good = pts(Seq[java.lang.Float](0.5f, -1f))
+    Clustering.kmeansCentroids(good, "vec_id", "embedding", k = 3, rounds = 2)
+    Clustering.kmeansTwoLevelCodebook(good, "vec_id", "embedding", kc = 2, kf = 2, rounds = 2)
+    assert(added.isEmpty, "after fits that succeed")
+    for (bad <- Seq(Seq[java.lang.Float](0.5f, null), Seq[java.lang.Float](0.5f, -1f, 2f))) {
+      val flat = intercept[IllegalArgumentException] {
+        Clustering.kmeansCentroids(pts(bad), "vec_id", "embedding", k = 3, rounds = 2)
+      }
+      assert(flat.getMessage.contains("null cluster"), flat.getMessage)
+      val twoLevel = intercept[IllegalArgumentException] {
+        Clustering.kmeansTwoLevelCodebook(pts(bad), "vec_id", "embedding",
+          kc = 2, kf = 2, rounds = 2)
+      }
+      assert(twoLevel.getMessage.contains("null cluster"), twoLevel.getMessage)
+      assert(added.isEmpty, s"after fits that fail on $bad")
+    }
+  }
+
   test("deterministic across reruns") {
     val rnd = new scala.util.Random(99)
     val vecs = (0L until 30L).map { id =>
