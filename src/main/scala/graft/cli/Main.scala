@@ -14,6 +14,19 @@ import graft.jobs.{EventTotalsJob, FriendRecsJob, UsersDemographicJob}
   * SURVEY §7.4.5).
   *
   * Usage: graft.cli.Main <job> <inputDir> <outputPath> [--single-file]
+  *
+  * Only the three marts are jobs here: they are what the reference's
+  * DAG submits each day (datamart-collector-dag.py), each reads a
+  * tier directory and yields one frame for the datamart sink. The 249
+  * queries are analytics over the same tiers, reached through Verify
+  * and Bench, with no sink contract of their own.
+  *
+  * `StgMoverJob` (the reference's mover.py) is not a job either: its
+  * input is the raw layer, where every event field sits in a nested
+  * `event` struct, and no shipped tier stores that layer, so a job
+  * given an `<inputDir>` would have nothing to read. It writes its own
+  * partitioned output and is exercised from a nested frame
+  * (`StgMoverJob.nest`) in `StgMoverSpec`.
   */
 object Main {
 

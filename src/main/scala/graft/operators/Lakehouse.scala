@@ -612,8 +612,11 @@ object Lakehouse {
       val f = it.next()
       if (f.getPath.getName.endsWith(".parquet")) bytes += f.getLen
     }
-    val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     val frame = spark.read.parquet(path.toString)
+    // capped at the row count: past one row per file, a smaller target
+    // only adds empty tasks (targetBytes = 1 would ask one per byte)
+    val byBytes = math.ceil(bytes.toDouble / targetBytes).toLong
+    val nFiles = math.max(1L, if (byBytes <= 1) byBytes else math.min(byBytes, frame.count())).toInt
     recluster.map(f => f(frame, nFiles)).getOrElse(frame.repartition(nFiles))
       .write.mode("overwrite").parquet(tmp.toString)
     fs.delete(backup, true) // stale backup from a previous crash

@@ -26,8 +26,8 @@ class BoundedCollectRegistrySpec extends AnyFunSuite {
 
   /** file (relative to src/main/scala/graft) -> (expected sites, bound). */
   private val registry: Map[String, (Int, String)] = Map(
-    "Bench.scala" -> (5,
-      "plain Scala collection .take on driver-side result lists (top-8/12 report slices, incl. the per-sweep flush's slowest-12); no Spark pull"),
+    "Bench.scala" -> (4,
+      "plain Scala collection .take on driver-side result lists (top-8/12 report slices of the one record renderer, plus the top-8 retry log line); no Spark pull"),
     "cli/Main.scala" -> (1,
       "args.take(3) on the CLI argument array; no Spark pull"),
     "operators/HeavyHitters.scala" -> (1,
