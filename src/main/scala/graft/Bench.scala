@@ -127,18 +127,23 @@ object Bench {
     val only = env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = only.fold(queries)(names => queries.filter { case (n, _) => names(n) })
-    // Pins were mined on one box class; minima from another core count
-    // say nothing about drift, so they are compared only on a match.
+    // Pins were mined on one box class and one tier; minima from
+    // another core count or tier say nothing about drift, so they are
+    // compared only when both match (a pin file naming no sf is
+    // tier-agnostic). A tier is the sf dir's last path component.
     val pinRecord = readJson(pinnedFile)
     val cores = spark.sparkContext.defaultParallelism
     val pinCores = pinRecord \ "cores" match { case JInt(c) => Some(c.toInt); case _ => None }
-    val comparePins = pinCores.contains(cores)
+    def tier(dir: String) = dir.stripSuffix("/").split('/').last
+    val pinTier = pinRecord \ "sf" match { case JString(d) => Some(tier(d)); case _ => None }
+    val comparePins = pinCores.contains(cores) && pinTier.forall(_ == tier(sfDir))
     val pinned = if (comparePins) queriesOf(pinRecord).filter(_._2 > 0).toMap else Map.empty[String, Double]
     val pins = JObject("cores" -> pinCores.fold[JValue](JNull)(JInt(_)),
       "session_cores" -> JInt(cores), "compared" -> JBool(comparePins))
     if (!comparePins)
       System.err.println(s"[bench] pins in $pinnedFile tagged ${pinCores.getOrElse("with no")} " +
-        s"cores, session has $cores: drift not compared")
+        s"cores on ${pinTier.getOrElse("any tier")}, session has $cores on ${tier(sfDir)}: " +
+        "drift not compared")
 
     // returns the elapsed time, or None when the query failed — a failed
     // query must NOT fold its near-zero time into best-of-N or the total

@@ -1,5 +1,6 @@
 package graft.io
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Datamart sinks (SURVEY §2.1 S5-S7).
@@ -31,18 +32,22 @@ object Sinks {
     * re-run path), false on a fresh write.
     *
     * The write is STAGED: the full mart lands in a hidden sibling dir,
-    * then swaps into place with a delete + rename through the Hadoop
-    * FileSystem API — so URI-style paths (hdfs://, s3a://) resolve on
-    * the lake, not the driver's local disk. A direct errorifexists
-    * write gives a torn mart under concurrent writers — Spark's
-    * existence check runs at job start, so two racing daily runs can
-    * both pass it and interleave part-files (duplicated rows). With
-    * the staged swap a reader sees a COMPLETE mart or none.
+    * then [[swap]] publishes it — the live mart is renamed aside to its
+    * [[backupOf]] name, the staging dir renamed in, the backup dropped —
+    * through the Hadoop FileSystem API, so URI-style paths (hdfs://,
+    * s3a://) resolve on the lake, not the driver's local disk. A
+    * direct errorifexists write gives a torn mart under concurrent
+    * writers — Spark's existence check runs at job start, so two
+    * racing daily runs can both pass it and interleave part-files
+    * (duplicated rows). With the staged swap a reader sees a COMPLETE
+    * mart or none, and yesterday's mart is never deleted before
+    * today's is in place: a failed publish rename restores it, and a
+    * crash between the renames is healed by the next write.
     *
     * Concurrency contract (the [[graft.operators.Lakehouse]] one):
     * SINGLE WRITER per mart path — in-JVM writers serialize on a
-    * per-path lock, but delete + rename cannot be made jointly atomic
-    * on a plain filesystem, so concurrent SEPARATE drivers must be
+    * per-path lock, but two renames cannot be made jointly atomic on
+    * a plain filesystem, so concurrent SEPARATE drivers must be
     * serialized externally (scheduler/lock service), and there is a
     * brief read-unavailability window during the swap in which a
     * reader gets path-not-found (never partial data) and should
@@ -52,28 +57,62 @@ object Sinks {
   def writeDatamart(df: DataFrame, path: String, singleFile: Boolean = false): Boolean = {
     val out = if (singleFile) df.coalesce(1) else df
     val fs = hadoopFs(df.sparkSession, path)
-    val target = fs.makeQualified(new org.apache.hadoop.fs.Path(path))
-    val staging = new org.apache.hadoop.fs.Path(target.getParent,
+    val target = fs.makeQualified(new Path(path))
+    val staging = new Path(target.getParent,
       s".${target.getName}_staging_${java.util.UUID.randomUUID()}")
     out.write.mode(SaveMode.Overwrite).parquet(staging.toString)
     val lock = pathLocks.computeIfAbsent(target.toString, _ => new Object)
-    lock.synchronized {
-      val existed = fs.exists(target)
-      if (existed && !fs.delete(target, true))
-        throw new java.io.IOException(s"writeDatamart: cannot clear $target")
-      if (!fs.rename(staging, target))
-        throw new java.io.IOException(s"writeDatamart: cannot publish $staging -> $target")
-      existed
+    lock.synchronized(swap(fs, staging, target))
+  }
+
+  /** The one backup name of every directory publish: `.<name>__old`,
+    * a dot-prefixed sibling, so Spark's listing of the parent (a
+    * partitioned table's leaves) never sees it.
+    */
+  private[graft] def backupOf(target: Path): Path =
+    new Path(target.getParent, s".${target.getName}__old")
+
+  /** Undo what a crash between [[swap]]'s two renames left: a backup
+    * whose target is missing is renamed back; a backup beside a live
+    * target (the swap completed) is dropped.
+    */
+  private[graft] def heal(fs: FileSystem, target: Path): Unit = {
+    val backup = backupOf(target)
+    if (fs.exists(backup)) {
+      if (fs.exists(target)) fs.delete(backup, true)
+      else if (!fs.rename(backup, target))
+        throw new java.io.IOException(s"cannot restore $backup to $target")
     }
+  }
+
+  /** Rename-aside publish of `staging` at `target`, after [[heal]]:
+    * the live target moves to its [[backupOf]] name, staging renames
+    * in, the backup is dropped. When the publish rename fails the
+    * original is renamed back and the call throws, leaving staging
+    * for inspection. Returns whether the target existed. Callers hold
+    * their own writer lock.
+    */
+  private[graft] def swap(fs: FileSystem, staging: Path, target: Path): Boolean = {
+    heal(fs, target)
+    val backup = backupOf(target)
+    val existed = fs.exists(target)
+    if (existed && !fs.rename(target, backup))
+      throw new java.io.IOException(s"cannot move $target aside")
+    if (!fs.rename(staging, target)) {
+      val restored = !existed || fs.rename(backup, target)
+      throw new java.io.IOException(s"cannot publish $staging to $target" +
+        (if (restored) "" else s"; the original is in $backup"))
+    }
+    if (existed) fs.delete(backup, true)
+    existed
   }
 
   private val pathLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   private def hadoopFs(spark: org.apache.spark.sql.SparkSession,
-                       path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+                       path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Fingerprint-guarded write-once for at-rest serving layouts
     * (IVF-bucketed corpus, zone-mapped tables, training shards): run
@@ -94,8 +133,8 @@ object Sinks {
   def writeOnce(restDir: String, layoutId: String)(write: => Unit): Boolean = {
     val spark = org.apache.spark.sql.SparkSession.active
     val fs = hadoopFs(spark, restDir)
-    val dir = fs.makeQualified(new org.apache.hadoop.fs.Path(restDir))
-    val marker = new org.apache.hadoop.fs.Path(dir, "_graft_layout")
+    val dir = fs.makeQualified(new Path(restDir))
+    val marker = new Path(dir, "_graft_layout")
     val lock = pathLocks.computeIfAbsent(dir.toString, _ => new Object)
     lock.synchronized {
       val fresh = fs.exists(marker) && {

@@ -46,7 +46,10 @@ object EventTotalsJob {
       .agg(count(lit(1)).as("cnt"),
         min(struct(col("ts"), col("event_id"))).as("first_evt"))
       // compact (|users|×|types|×|weeks|) and read by both branches —
-      // materialize once rather than re-running scan+tag+agg twice
+      // materialize once rather than re-running scan+tag+agg twice.
+      // Measured without it (traced datamart_daily, 4× sf0.01 events,
+      // 4 cores): shuffle write 824 → 1253 KB per pass and task-seconds
+      // 1.4–1.9 → 2.0–2.4 s — the branches do not share one exchange.
       .truncateLineage()
 
     // Conditional aggregation replaces the per-class count pipelines.

@@ -96,7 +96,10 @@ object FriendRecsJob {
       // blocking input, the contact expansion, both flag attachments,
       // the decoration) — materialize once instead of re-running
       // scan+tag+agg per reference. localCheckpoint over persist: no
-      // cache-registry entry for callers to leak.
+      // cache-registry entry for callers to leak. Measured without it
+      // (traced datamart_daily, 4× sf0.01 events, 4 cores): 14 → 17
+      // jobs, task-seconds 0.9–1.2 → 2.9–3.6 s, warm wall 1.8–2.4 →
+      // 2.5–3.5 s.
       .truncateLineage()
 
     // Contact exclusion is direction-symmetric (the reference expands

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.GraftSession.LineageOps
+import graft.io.Sinks
 
 /** Lakehouse-style table-maintenance operators the reference's daily
   * datamart rewrite (SURVEY §2.1 S6: errorifexists→overwrite) implies
@@ -86,7 +87,7 @@ object Lakehouse {
     * when the swap finishes. A concurrent second writer fails loudly
     * at acquisition instead of mistaking the swap's brief
     * read-unavailability window for a crash and racing the publisher
-    * through the `__old` restore branch.
+    * through the [[graft.io.Sinks.heal]] restore branch.
     *
     * The marker carries the holder's identity and acquisition
     * timestamp (host, pid, epoch millis — written AFTER the atomic
@@ -95,7 +96,7 @@ object Lakehouse {
     * when. A writer that CRASHES inside the critical section leaves
     * the marker behind: by default later callers keep failing until
     * an operator confirms no writer is alive and deletes it — only
-    * then does the protocol's existing `__old` self-heal run.
+    * then does the protocol's [[graft.io.Sinks.heal]] run.
     * Deployments that prefer availability can set
     * `graft.lock.stale.ms=N` (`spark.hadoop.graft.lock.stale.ms`): an
     * acquirer finding a marker older than N ms deletes it and retries
@@ -197,7 +198,7 @@ object Lakehouse {
         s"$op: writer lock $lock is ${holderInfo()} — another swap is in " +
           "flight on this table (or a crashed writer left the marker; " +
           "verify no writer is alive, then delete the marker — or set " +
-          "graft.lock.stale.ms — to let the __old self-heal run)")
+          "graft.lock.stale.ms — to let the crash self-heal run)")
     // we own the marker now; stamping identity over our own empty file
     // is safe and makes the next contender's error message actionable
     try {
@@ -306,14 +307,17 @@ object Lakehouse {
           .otherwise(lit("")).as("changed_cols")): _*)
   }
 
-  /** Write-Audit-Publish: stage the frame to `<dir>/.wap_staging`,
-    * audit the READ-BACK files with an expectation suite (auditing
-    * what was actually written, not the plan that produced it), and
-    * only on a clean report atomically swap the staging directory
-    * into place. A failing audit leaves the current table untouched
-    * and the staging directory behind for inspection — the
-    * Iceberg/Nessie WAP contract from plain filesystem renames.
-    * Returns the audit report and whether it published.
+  /** Write-Audit-Publish: stage the frame to the `.<name>__wap_staging`
+    * sibling, audit the READ-BACK files with an expectation suite
+    * (auditing what was actually written, not the plan that produced
+    * it), and only on a clean report publish the staging directory
+    * with [[graft.io.Sinks.swap]] (rename-aside via the shared
+    * `.<name>__old` backup). A failing audit leaves the current table
+    * untouched and the staging directory behind for inspection — the
+    * Iceberg/Nessie WAP contract from plain filesystem renames. Every
+    * call first heals a crash between a previous publish's renames
+    * ([[graft.io.Sinks.heal]]), audit outcome aside. Returns the
+    * audit report and whether it published.
     */
   def writeAuditPublish(spark: org.apache.spark.sql.SparkSession, df: DataFrame,
                         dir: String,
@@ -322,8 +326,8 @@ object Lakehouse {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val target = new Path(dir)
     val staging = new Path(target.getParent, "." + target.getName + "__wap_staging")
-    val retired = new Path(target.getParent, "." + target.getName + "__wap_old")
     withWriterLock(fs, spark.sparkContext.hadoopConfiguration, dir, "WAP") {
+      Sinks.heal(fs, target)
       fs.delete(staging, true)
       df.write.parquet(staging.toString)
       // materialize BEFORE any rename — the lazy plan reads staging,
@@ -332,16 +336,7 @@ object Lakehouse {
         .select(col("check_name"), col("violations"), col("total"), col("passed"))
         .truncateLineage()
       val clean = report.where(!col("passed")).isEmpty
-      if (clean) {
-        fs.delete(retired, true)
-        if (fs.exists(target)) {
-          if (!fs.rename(target, retired))
-            throw new IllegalStateException(s"WAP: could not retire $target")
-        }
-        if (!fs.rename(staging, target))
-          throw new IllegalStateException(s"WAP: could not publish $staging")
-        fs.delete(retired, true)
-      }
+      if (clean) Sinks.swap(fs, staging, target)
       (report, clean)
     }
   }
@@ -500,29 +495,15 @@ object Lakehouse {
         col("valid_to").isNull.as("is_current"))
   }
 
-  /** Small-file compaction (OPTIMIZE): rewrite a parquet directory
-    * into ceil(bytes/targetBytes) files. The perpetual lakehouse
-    * problem — streaming/incremental writers leave thousands of KB
-    * files whose open/footer cost dominates scans; bin-packing by
-    * TOTAL BYTES (not file count) keeps output files near the target
-    * regardless of input skew. The swap renames the ORIGINAL aside
-    * first, then the rewrite into place, then deletes the backup; a
-    * failed rename restores the original and throws instead of
-    * silently reporting success. A crash BETWEEN the two renames
-    * leaves the table only in the `__old` sibling — readers see
-    * path-not-found until the next compact() call, which self-heals by
-    * restoring the backup before doing anything else (two directory
-    * renames cannot be made jointly atomic on a plain filesystem; the
-    * data itself is never lost).
-    */
   /** Partition-spec EVOLUTION: rewrite a partitioned table under a
     * new partition column set (e.g. year=/month= → month= only, or
     * adding a bucket column as query patterns change) so readers never
     * see a MIXED old/new layout. The full table rewrites into
-    * a hidden staging dir under the NEW spec, then swaps in with the
-    * rename-aside protocol [[compact]] uses: live → __old, staging →
-    * live, __old dropped — a crash between renames is healed on the
-    * next call (restore from __old).
+    * a staging sibling (`<name>__respec`) under the NEW spec, then
+    * publishes it with [[graft.io.Sinks.swap]], the rename-aside
+    * protocol every publisher shares: live → `.<name>__old`, staging
+    * → live, backup dropped — a crash between renames is healed on
+    * the next call ([[graft.io.Sinks.heal]]).
     *
     * Concurrency contract (same as [[compact]]): SINGLE WRITER —
     * enforced by the [[withWriterLock]] marker, so a concurrent
@@ -546,30 +527,38 @@ object Lakehouse {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     withWriterLock(fs, spark.sparkContext.hadoopConfiguration, dir, "evolve") {
-      val crashBackup = new org.apache.hadoop.fs.Path(dir + "__old")
-      if (!fs.exists(path) && fs.exists(crashBackup) &&
-          !fs.rename(crashBackup, path))
-        throw new java.io.IOException(s"evolve: cannot restore $crashBackup")
+      Sinks.heal(fs, path)
       val staging = new org.apache.hadoop.fs.Path(dir + "__respec")
       if (fs.exists(staging)) fs.delete(staging, true)
       val df = spark.read.option("mergeSchema", "true").parquet(dir)
       df.repartition(newPartitionCols.map(org.apache.spark.sql.functions.col): _*)
         .write.partitionBy(newPartitionCols: _*)
         .mode("overwrite").parquet(staging.toString)
-      if (fs.exists(crashBackup)) fs.delete(crashBackup, true)
-      if (!fs.rename(path, crashBackup))
-        throw new java.io.IOException(s"evolve: cannot set aside $path")
-      if (!fs.rename(staging, path)) {
-        fs.rename(crashBackup, path) // restore; staging left for inspection
-        throw new java.io.IOException(s"evolve: cannot publish $staging")
-      }
-      fs.delete(crashBackup, true)
+      Sinks.swap(fs, staging, path)
       spark.read.parquet(dir)
         .select(newPartitionCols.map(org.apache.spark.sql.functions.col): _*)
         .distinct().count()
     }
   }
 
+  /** Small-file compaction (OPTIMIZE): rewrite a parquet directory
+    * into ceil(bytes/targetBytes) files. The perpetual lakehouse
+    * problem — streaming/incremental writers leave thousands of KB
+    * files whose open/footer cost dominates scans; bin-packing by
+    * TOTAL BYTES (not file count) keeps output files near the target
+    * regardless of input skew. The rewrite publishes through
+    * [[graft.io.Sinks.swap]]: the ORIGINAL renames aside to
+    * `.<name>__old` first, then the rewrite into place, then the
+    * backup is deleted; a failed rename restores the original and
+    * throws instead of silently reporting success. A crash BETWEEN
+    * the two renames leaves the table only in the backup — readers
+    * see path-not-found until the next compact() call, which
+    * self-heals ([[graft.io.Sinks.heal]]) before doing anything else
+    * (two directory renames cannot be made jointly atomic on a plain
+    * filesystem; the data itself is never lost). The backup name is
+    * the one [[compactPartitioned]] uses on a flat root, so either
+    * call heals the other's crash.
+    */
   def compact(spark: org.apache.spark.sql.SparkSession, dir: String,
               targetBytes: Long,
               recluster: Option[(org.apache.spark.sql.DataFrame, Int) =>
@@ -577,21 +566,17 @@ object Lakehouse {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     withWriterLock(fs, spark.sparkContext.hadoopConfiguration, dir, "compact") {
-      val crashBackup = new org.apache.hadoop.fs.Path(dir + "__old")
-      if (!fs.exists(path) && fs.exists(crashBackup) &&
-          !fs.rename(crashBackup, path))
-        throw new java.io.IOException(s"compact: cannot restore $crashBackup")
+      Sinks.heal(fs, path)
       // recursive listing: partitioned layouts keep data files under
       // partition subdirectories (note the rewrite itself flattens the
       // layout — [[compactPartitioned]] is the layout-preserving form)
       compactLeaf(spark, fs, path,
-        new org.apache.hadoop.fs.Path(dir + "__compacting"), crashBackup,
-        targetBytes, recluster)
+        new org.apache.hadoop.fs.Path(dir + "__compacting"), targetBytes, recluster)
     }
   }
 
   /** One directory's crash-safe rewrite: size by total parquet bytes,
-    * rewrite into `tmp`, swap via rename-aside + restore-on-failure.
+    * rewrite into `tmp`, publish with [[graft.io.Sinks.swap]].
     * Shared by the flat [[compact]] and the per-leaf passes of
     * [[compactPartitioned]]. `recluster` (frame, nFiles) replaces the
     * default shuffle-repartition with a layout-producing partitioning
@@ -602,7 +587,6 @@ object Lakehouse {
                           fs: org.apache.hadoop.fs.FileSystem,
                           path: org.apache.hadoop.fs.Path,
                           tmp: org.apache.hadoop.fs.Path,
-                          backup: org.apache.hadoop.fs.Path,
                           targetBytes: Long,
                           recluster: Option[(org.apache.spark.sql.DataFrame, Int) =>
                             org.apache.spark.sql.DataFrame] = None): Int = {
@@ -619,14 +603,7 @@ object Lakehouse {
     val nFiles = math.max(1L, if (byBytes <= 1) byBytes else math.min(byBytes, frame.count())).toInt
     recluster.map(f => f(frame, nFiles)).getOrElse(frame.repartition(nFiles))
       .write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(backup, true) // stale backup from a previous crash
-    if (!fs.rename(path, backup))
-      throw new java.io.IOException(s"compact: cannot move $path aside")
-    if (!fs.rename(tmp, path)) {
-      fs.rename(backup, path) // restore; original was never deleted
-      throw new java.io.IOException(s"compact: cannot move $tmp into place")
-    }
-    fs.delete(backup, true)
+    Sinks.swap(fs, tmp, path)
     nFiles
   }
 
@@ -668,15 +645,16 @@ object Lakehouse {
     * the layout — the form a real lake needs, since the flat
     * [[compact]] would fold the partition columns into the data files
     * and destroy partition pruning. Each leaf gets the same crash-safe
-    * rename protocol; scratch/backup siblings are dot-prefixed so
+    * [[graft.io.Sinks.swap]]; scratch/backup siblings are dot-prefixed so
     * Spark's file listing (which skips `.`/`_` names) NEVER sees a
     * half-written rewrite or a crash leftover when reading the root —
     * readers of an in-progress table see either the old or the new
     * files of a leaf, nothing else.
     *
     * Self-healing: a crash between a leaf's two renames leaves only
-    * `.leaf__old`; the next call restores every such orphan (and
-    * clears stale backups whose swap DID complete) before compacting.
+    * `.leaf__old`; the next call runs [[graft.io.Sinks.heal]] on every
+    * such orphan (restoring it, or clearing a stale backup whose swap
+    * DID complete) before compacting.
     * Driver-side work is one directory walk — manifest cardinality,
     * the same class as the zone-map planner.
     *
@@ -689,30 +667,26 @@ object Lakehouse {
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // Self-heal the ROOT itself first: when the root directory IS a
     // leaf (non-partitioned layout), its crash backup lands as a
-    // dot-prefixed SIBLING outside the tree heal() scans — a crash
+    // dot-prefixed SIBLING outside the tree healTree() scans — a crash
     // between that leaf's two renames would otherwise strand the table
     // in `.root__old` with every later call failing the existence
     // require below.
     withWriterLock(fs, spark.sparkContext.hadoopConfiguration, root, "compactPartitioned") {
-    val rootBackup = new Path(rootPath.getParent, "." + rootPath.getName + "__old")
-    if (!fs.exists(rootPath) && fs.exists(rootBackup) &&
-        !fs.rename(rootBackup, rootPath))
-      throw new java.io.IOException(s"compactPartitioned: cannot restore $rootBackup")
+    Sinks.heal(fs, rootPath)
     require(fs.exists(rootPath), s"compactPartitioned: no such dir $root")
 
-    def heal(d: Path): Unit =
+    def healTree(d: Path): Unit =
       fs.listStatus(d).filter(_.isDirectory).foreach { st =>
         val n = st.getPath.getName
-        if (n.startsWith(".") && n.endsWith("__old")) {
-          val orig = new Path(d, n.stripPrefix(".").stripSuffix("__old"))
-          if (fs.exists(orig)) fs.delete(st.getPath, true) // swap completed
-          else if (!fs.rename(st.getPath, orig))
-            throw new java.io.IOException(s"compactPartitioned: cannot restore ${st.getPath}")
-        } else if (n.startsWith(".") && n.endsWith("__compacting"))
+        // a dir is a leaf backup iff it is the backup name of the
+        // leaf its name strips to
+        val orig = new Path(d, n.stripPrefix(".").stripSuffix("__old"))
+        if (Sinks.backupOf(orig).getName == n) Sinks.heal(fs, orig)
+        else if (n.startsWith(".") && n.endsWith("__compacting"))
           fs.delete(st.getPath, true) // half-written rewrite, safe to drop
-        else if (!n.startsWith(".")) heal(st.getPath)
+        else if (!n.startsWith(".")) healTree(st.getPath)
       }
-    heal(rootPath)
+    healTree(rootPath)
 
     def leaves(d: Path): Seq[Path] = {
       val entries = fs.listStatus(d)
@@ -726,8 +700,7 @@ object Lakehouse {
     leaves(rootPath).map { leaf =>
       val parent = leaf.getParent
       val n = compactLeaf(spark, fs, leaf,
-        new Path(parent, "." + leaf.getName + "__compacting"),
-        new Path(parent, "." + leaf.getName + "__old"), targetBytes)
+        new Path(parent, "." + leaf.getName + "__compacting"), targetBytes)
       leaf.toUri.getPath.stripPrefix(rootUri).stripPrefix("/") -> n
     }
     } // withWriterLock

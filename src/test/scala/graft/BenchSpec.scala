@@ -7,7 +7,7 @@ import org.json4s.jackson.JsonMethods
 /** The Bench output contract: every line and the results file render
   * one record with a fixed key set per shape, failures ride every line
   * once seen, targeted runs merge into the results file, and pins are
-  * compared only on the core count they were mined on.
+  * compared only on the core count and tier they were mined on.
   */
 class BenchSpec extends SparkSpec {
 
@@ -53,9 +53,11 @@ class BenchSpec extends SparkSpec {
     (lines.map(JsonMethods.parse(_)), JsonMethods.parse(Files.readString(dir.resolve("results.json"))))
   }
 
-  private def writePins(dir: Path, cores: Int, pins: Map[String, Double]): Unit =
+  private def writePins(dir: Path, cores: Int, pins: Map[String, Double],
+                        sf: Option[String] = None): Unit =
     Files.writeString(dir.resolve("pins.json"), JsonMethods.compact(JObject(
-      "cores" -> JInt(cores), "queries" -> JObject(pins.map { case (k, v) => k -> JDouble(v) }.toList))))
+      sf.map("sf" -> JString(_)).toList ++ List(
+        "cores" -> JInt(cores), "queries" -> JObject(pins.map { case (k, v) => k -> JDouble(v) }.toList)))))
 
   test("every line renders one record: parent key sets, failures on every line, compact last") {
     val dir = Files.createTempDirectory("graft_bench")
@@ -108,5 +110,18 @@ class BenchSpec extends SparkSpec {
     assert(keys(file \ "drift") === Set(target))
     assert(lines.last \ "n_drift" === JInt(1))
     assert(file \ "pins" \ "compared" === JBool(true))
+  }
+
+  test("pins mined on another tier are not compared, even at matching cores") {
+    val dir = Files.createTempDirectory("graft_bench_tier")
+    val cores = spark.sparkContext.defaultParallelism
+    // 1e-6 s pins would drive both retry passes if they were judged
+    writePins(dir, cores, real.map(_ -> 1e-6).toMap, sf = Some("/elsewhere/sf0.1"))
+    val (lines, file) = bench(dir, Map("SPARK_GRAFT_BENCH_ONLY" -> real.head))
+    for (l <- Seq(lines.last, file))
+      assert(l \ "pins" === JObject("cores" -> JInt(cores),
+        "session_cores" -> JInt(cores), "compared" -> JBool(false)))
+    assert(file \ "retry_passes" === JInt(0))
+    assert(file \ "drift" === JNull && lines.last \ "n_drift" === JNull)
   }
 }

@@ -107,9 +107,9 @@ class LakehouseSpec extends SparkSpec {
       q.collect(); q.queryExecution.executedPlan.toString }
     assert(plan.contains("PartitionFilters") && plan.contains("mn#"),
       plan.take(600))
-    // crash simulation: live dir gone, __old present → next call heals
+    // crash simulation: live dir gone, .t__old present → next call heals
     val p = new java.io.File(dir)
-    val old = new java.io.File(dir + "__old")
+    val old = new java.io.File(p.getParent, ".t__old")
     assert(p.renameTo(old))
     val n2 = Lakehouse.evolvePartitionSpec(spark, dir, Seq("yr"))
     assert(n2 === 3)
@@ -180,6 +180,25 @@ class LakehouseSpec extends SparkSpec {
     val (_, ok3) = Lakehouse.writeAuditPublish(spark, next, dir, audit)
     assert(ok3)
     assert(spark.read.parquet(dir).collect().map(_.getLong(0)).toSeq === Seq(7L))
+  }
+
+  test("write-audit-publish heals a crash between the publish renames, even on a failing audit") {
+    import spark.implicits._
+    import graft.operators.Expectations
+    import graft.operators.Expectations.RowCheck
+    val dir = java.nio.file.Files.createTempDirectory("graft_wap_heal").toString + "/t"
+    def audit(df: org.apache.spark.sql.DataFrame) =
+      Expectations.suite(Expectations.rowChecks(df,
+        Seq(RowCheck("non_negative", col("v") < 0))))
+    val (_, ok1) = Lakehouse.writeAuditPublish(spark, Seq((1L, 10), (2L, 20)).toDF("k", "v"), dir, audit)
+    assert(ok1)
+    // crash window: the live table moved to its backup, staging never renamed in
+    val live = new java.io.File(dir)
+    assert(live.renameTo(new java.io.File(live.getParent, ".t__old")))
+    val (_, ok2) = Lakehouse.writeAuditPublish(spark, Seq((3L, -5)).toDF("k", "v"), dir, audit)
+    assert(!ok2)
+    assert(spark.read.parquet(dir).orderBy("k").collect().map(_.getLong(0)).toSeq === Seq(1L, 2L))
+    assert(live.getParentFile.list().toSet === Set("t", ".t__wap_staging"))
   }
 
   test("threeWayMerge: full outcome taxonomy on a constructed base/A/B triple") {

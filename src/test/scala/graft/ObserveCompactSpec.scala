@@ -53,13 +53,16 @@ class ObserveCompactSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_compact_part").toString + "/t"
     Tables.events(spark, sfDir)
       .select(col("event_id"), col("user_id"), (col("event_id") % 4).as("p"))
+      .orderBy("event_id").limit(40)
       .repartition(16)
       .write.partitionBy("p").mode("overwrite").parquet(dir)
     val beforeRows = spark.read.parquet(dir).count()
+    assert(beforeRows === 40)
     // data files live under p=*/ subdirs; a top-level-only listing
-    // would see 0 bytes and collapse everything to 1 file
+    // would see 0 bytes and collapse everything to 1 file. A one-byte
+    // target asks for more files than rows, so the row cap decides.
     val n = Lakehouse.compact(spark, dir, targetBytes = 1L)
-    assert(n > 1, s"recursive sizing failed: $n files")
+    assert(n === beforeRows, s"recursive sizing or row cap failed: $n files")
     assert(spark.read.parquet(dir).count() === beforeRows)
   }
 
@@ -132,12 +135,13 @@ class ObserveCompactSpec extends SparkSpec {
     // simulate the crash window: table moved aside, rewrite never landed
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(p, new org.apache.hadoop.fs.Path(dir + "__old")))
+    val backup = new org.apache.hadoop.fs.Path(p.getParent, ".t__old")
+    assert(fs.rename(p, backup))
     // next compact() restores the backup first, then compacts normally
     val n = Lakehouse.compact(spark, dir, targetBytes = Long.MaxValue)
     assert(n === 1)
     assert(spark.read.parquet(dir).count() === rows)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + "__old")))
+    assert(!fs.exists(backup))
   }
 
   test("compaction bin-packs small files to the byte target") {
