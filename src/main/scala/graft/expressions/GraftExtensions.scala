@@ -4,12 +4,17 @@ import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** SparkSessionExtensions entry point: registers graft's native
-  * expressions as SQL functions. Activate with
+  * expressions as SQL functions, and graft's optimizer rules and
+  * planner strategy. Activate with
   * `.config("spark.sql.extensions", "graft.expressions.GraftExtensions")`
-  * or use the [[GraftFunctions]] Column wrappers (no registration
-  * needed) from the DataFrame API.
+  * (GraftSession does this). The [[GraftFunctions]] Column wrappers of
+  * the registered functions resolve through that registration; the
+  * expressions that carry driver-held tables (k-means centroids, PQ
+  * codebooks, BPE ranks, bloom bits) are built directly through
+  * [[org.apache.spark.sql.graft.ColumnBridge]] and need none.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.expressions.Literal
@@ -19,42 +24,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     case Literal(v: Int, IntegerType) => v
     case other => throw new IllegalArgumentException(
       s"$what must be an integer literal, got $other")
-  }
-
-  // constant-matrix extraction for kmeans_argmin — the centroid table
-  // is function-build-time data (the intArg pattern), never a per-row
-  // column, so the expression can ride codegen as a plain reference
-  private def longArrayArg(e: Expression, what: String): Seq[Long] = e match {
-    case Literal(v: org.apache.spark.sql.catalyst.util.ArrayData,
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType, _)) =>
-      v.toLongArray().toSeq
-    case other => throw new IllegalArgumentException(
-      s"$what must be an array<bigint> literal, got $other")
-  }
-
-  private def longMatrixArg(e: Expression, what: String): Seq[Seq[Long]] = e match {
-    case Literal(v: org.apache.spark.sql.catalyst.util.ArrayData,
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.LongType, _), _)) =>
-      (0 until v.numElements()).map(i => v.getArray(i).toLongArray().toSeq)
-    case other => throw new IllegalArgumentException(
-      s"$what must be an array<array<bigint>> literal, got $other")
-  }
-
-  private def longMatrix3Arg(e: Expression, what: String): Seq[Seq[Seq[Long]]] = e match {
-    case Literal(v: org.apache.spark.sql.catalyst.util.ArrayData,
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.LongType, _), _), _)) =>
-      (0 until v.numElements()).map { i =>
-        val m = v.getArray(i)
-        (0 until m.numElements()).map(j => m.getArray(j).toLongArray().toSeq)
-      }
-    case other => throw new IllegalArgumentException(
-      s"$what must be an array<array<array<bigint>>> literal, got $other")
   }
 
   private def inject(ext: SparkSessionExtensions, name: String, clazz: Class[_],
@@ -104,18 +73,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     inject(ext, "dot_product", classOf[DotProduct], { cs =>
       require(cs.size == 2, "dot_product(a, b)")
       DotProduct(cs.head, cs(1))
-    })
-    inject(ext, "kmeans_argmin", classOf[KmeansArgmin], { cs =>
-      require(cs.size == 3, "kmeans_argmin(q, centroids, labels)")
-      KmeansArgmin(cs.head,
-        longMatrixArg(cs(1), "kmeans_argmin centroids"),
-        longArrayArg(cs(2), "kmeans_argmin labels"))
-    })
-    inject(ext, "kmeans_argmin_2l", classOf[KmeansArgmin2L], { cs =>
-      require(cs.size == 4, "kmeans_argmin_2l(cell, q, centsPerCell, labelsPerCell)")
-      KmeansArgmin2L(cs.head, cs(1),
-        longMatrix3Arg(cs(2), "kmeans_argmin_2l centroids"),
-        longMatrixArg(cs(3), "kmeans_argmin_2l labels"))
     })
     inject(ext, "sorted_intersect_count", classOf[SortedIntersectCount], { cs =>
       require(cs.size == 2, "sorted_intersect_count(a, b)")
@@ -167,21 +124,19 @@ object GraftFunctions {
     org.apache.spark.sql.functions.call_function("dot_product", a, b)
 
   /** struct(cluster, qdist) argmin assignment of a quantized
-    * array<bigint> column against driver-held centroids.
+    * array<bigint> column against driver-held centroids, bound into
+    * the expression through [[org.apache.spark.sql.graft.ColumnBridge]].
     */
   def kmeansArgmin(q: Column, cents: Seq[Seq[Long]], labels: Seq[Long]): Column =
-    org.apache.spark.sql.functions.call_function("kmeans_argmin", q,
-      org.apache.spark.sql.functions.typedLit(cents),
-      org.apache.spark.sql.functions.typedLit(labels))
+    ColumnBridge.column(KmeansArgmin(ColumnBridge.expression(q), cents, labels))
 
   /** struct(cluster, qdist) argmin of the quantized vector against the
     * fine-centroid slice its coarse cell selects (two-level k-means).
     */
   def kmeansArgmin2l(cell: Column, q: Column, cents: Seq[Seq[Seq[Long]]],
                      labels: Seq[Seq[Long]]): Column =
-    org.apache.spark.sql.functions.call_function("kmeans_argmin_2l", cell, q,
-      org.apache.spark.sql.functions.typedLit(cents),
-      org.apache.spark.sql.functions.typedLit(labels))
+    ColumnBridge.column(KmeansArgmin2L(ColumnBridge.expression(cell),
+      ColumnBridge.expression(q), cents, labels))
 
   def sortedIntersectCount(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("sorted_intersect_count", a, b)

@@ -217,10 +217,9 @@ case class SortedIntersectCount(left: Expression, right: Expression) extends Bin
 /** Zero-shuffle k-means assignment: argmin of the exact quantized
   * squared-L2 distance over a DRIVER-HELD centroid matrix, returned
   * as struct(cluster, qdist). The matrix and labels are constructor
-  * constants (extracted from literals at function-build time, the
-  * HashedShingles `n` pattern) riding codegen as references — the
-  * expression tree is O(1) in k, so Catalyst's per-Lloyd-round
-  * re-analysis stays flat, and the per-row work is one fused JVM loop
+  * constants (bound through ColumnBridge, the PqEncode pattern)
+  * riding codegen as references — the expression tree is O(1) in k,
+  * so analysis stays flat, and the per-row work is one fused JVM loop
   * ([[VectorKernels.kmeansArgmin]]) instead of k interpreted
   * higher-order lambdas. Tie-break: smaller label on equal distance
   * (lexicographic min over (qdist, label)) — exactly the
@@ -274,8 +273,8 @@ case class KmeansArgmin(child: Expression, cents: Seq[Seq[Long]],
   * runs over that cell's slice only — per-row cost O(k_fine·dim), not
   * O(kc·kf·dim), which is what makes effective cluster counts of
   * kc·kf (up to 64·64 = 4096) affordable: two fused ≤64-centroid
-  * scans per row instead of one 4096-centroid scan. Same constant-
-  * extraction, codegen, tie-break, and null conventions as
+  * scans per row instead of one 4096-centroid scan. Same constant
+  * binding, codegen, tie-break, and null conventions as
   * [[KmeansArgmin]]; ragged per-cell centroid counts are expected
   * (cells smaller than k_fine seed fewer centroids).
   */

@@ -31,10 +31,11 @@ object Sinks {
     * iff data pre-existed and was overwritten (the daily idempotent
     * re-run path), false on a fresh write.
     *
-    * The write is STAGED: the full mart lands in a hidden sibling dir,
-    * then [[swap]] publishes it — the live mart is renamed aside to its
-    * [[backupOf]] name, the staging dir renamed in, the backup dropped —
-    * through the Hadoop FileSystem API, so URI-style paths (hdfs://,
+    * The write is STAGED: the full mart lands in the hidden sibling
+    * `.<mart>__staging` (whatever a failed or crashed write left there
+    * is deleted first), then [[swap]] publishes it — the live mart is
+    * renamed aside to its [[backupOf]] name, the staging dir renamed
+    * in, the backup dropped — through the Hadoop FileSystem API, so URI-style paths (hdfs://,
     * s3a://) resolve on the lake, not the driver's local disk. A
     * direct errorifexists write gives a torn mart under concurrent
     * writers — Spark's existence check runs at job start, so two
@@ -45,8 +46,8 @@ object Sinks {
     * crash between the renames is healed by the next write.
     *
     * Concurrency contract (the [[graft.operators.Lakehouse]] one):
-    * SINGLE WRITER per mart path — in-JVM writers serialize on a
-    * per-path lock, but two renames cannot be made jointly atomic on
+    * SINGLE WRITER per mart path — in-JVM writers serialize their
+    * staged write and swap on a per-path lock, but two renames cannot be made jointly atomic on
     * a plain filesystem, so concurrent SEPARATE drivers must be
     * serialized externally (scheduler/lock service), and there is a
     * brief read-unavailability window during the swap in which a
@@ -58,11 +59,13 @@ object Sinks {
     val out = if (singleFile) df.coalesce(1) else df
     val fs = hadoopFs(df.sparkSession, path)
     val target = fs.makeQualified(new Path(path))
-    val staging = new Path(target.getParent,
-      s".${target.getName}_staging_${java.util.UUID.randomUUID()}")
-    out.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    val staging = new Path(target.getParent, s".${target.getName}__staging")
     val lock = pathLocks.computeIfAbsent(target.toString, _ => new Object)
-    lock.synchronized(swap(fs, staging, target))
+    lock.synchronized {
+      fs.delete(staging, true)
+      out.write.parquet(staging.toString)
+      swap(fs, staging, target)
+    }
   }
 
   /** The one backup name of every directory publish: `.<name>__old`,

@@ -78,6 +78,16 @@ object GraphRank {
     require(n > 0, "pageRank on an empty graph")
     val r0 = Scale / n
     val base = (15L * r0) / 100L
+    rankLoop(eDeg, nodes, r0, lit(base), iters)
+  }
+
+  /** The damped update both rankings iterate: every node starts at
+    * `r0`, and each round's rank is `teleport` (a column over `nodes`)
+    * plus `(85·Σcontrib) div 100`.
+    */
+  private def rankLoop(eDeg: DataFrame, nodes: DataFrame, r0: Long,
+                       teleport: org.apache.spark.sql.Column,
+                       iters: Int): DataFrame = {
     var ranks = nodes.select(col("node"), lit(r0).as("rank"))
     var iter = 0
     while (iter < iters) {
@@ -88,7 +98,7 @@ object GraphRank {
       ranks = nodes
         .join(contribs, Seq("node"), "left")
         .select(col("node"),
-          (lit(base) + expr("(85 * coalesce(s, 0L)) div 100")).as("rank"))
+          (teleport + expr("(85 * coalesce(s, 0L)) div 100")).as("rank"))
       // checkpoint PERIODICALLY, not per round: the per-round plan is
       // shallow (one join + one agg), so a few stacked rounds replan
       // cheaply, while an eager materialization every round costs more
@@ -129,7 +139,6 @@ object GraphRank {
                            isSeed: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
                            iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be 1..50, got $iters")
-    val eDeg = g.eDeg
     // the seed flag is a cheap projection over the already-
     // checkpointed shared node table — no second materialization
     val nodes = g.nodes.select(col("node"), isSeed(col("node")).as("seed"))
@@ -137,23 +146,7 @@ object GraphRank {
     require(nSeeds > 0, "personalizedPageRank needs at least one seed node")
     val base = (15L * Scale / 100L) / nSeeds
     val r0 = Scale / math.max(g.n, 1L)
-    var ranks = nodes.select(col("node"), lit(r0).as("rank"))
-    var iter = 0
-    while (iter < iters) {
-      val contribs = eDeg
-        .join(ranks.select(col("node").as("src"), col("rank")), "src")
-        .select(col("dst").as("node"), expr("rank div deg").as("c"))
-        .groupBy("node").agg(sum(col("c")).as("s"))
-      ranks = nodes
-        .join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          (when(col("seed"), lit(base)).otherwise(lit(0L)) +
-            expr("(85 * coalesce(s, 0L)) div 100")).as("rank"))
-      if ((iter + 1) % 4 == 0 && iter + 1 < iters)
-        ranks = ranks.truncateLineage()
-      iter += 1
-    }
-    ranks
+    rankLoop(g.eDeg, nodes, r0, when(col("seed"), lit(base)).otherwise(lit(0L)), iters)
   }
 
   /** Canonical undirected edge list: self-loops dropped, both input

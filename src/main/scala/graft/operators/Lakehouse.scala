@@ -240,6 +240,15 @@ object Lakehouse {
     withWriterLock(fs, conf, dir, op)(body)
   }
 
+  /** One side of a keyed full-outer compare: the `keys`, each of
+    * `cols` renamed `__<side>_<col>`, and a `__<side>_present` flag
+    * that is null exactly where the join found no row on this side.
+    */
+  private def tag(df: DataFrame, side: String, keys: Seq[String],
+                  cols: Seq[String]): DataFrame =
+    df.select((keys.map(col) ++ cols.map(c => col(c).as(s"__${side}_$c")) :+
+      lit(true).as(s"__${side}_present")): _*)
+
   /** MERGE INTO semantics over two snapshots with identical schemas:
     * source rows overwrite target rows on the key, unmatched source
     * rows insert, unmatched target rows are kept. Emits the merged
@@ -256,10 +265,7 @@ object Lakehouse {
     require(target.columns.sameElements(source.columns),
       s"mergeUpsert needs identical schemas; got ${target.columns.mkString(",")} vs ${source.columns.mkString(",")}")
     val dataCols = target.columns.filterNot(keys.contains).toSeq
-    def tag(df: DataFrame, side: String): DataFrame =
-      df.select((keys.map(col) ++ dataCols.map(c => col(c).as(s"__${side}_$c")) :+
-        lit(true).as(s"__${side}_present")): _*)
-    tag(target, "t").join(tag(source, "s"), keys, "full_outer")
+    tag(target, "t", keys, dataCols).join(tag(source, "s", keys, dataCols), keys, "full_outer")
       .select((keys.map(col) ++
         dataCols.map(c => coalesce(col(s"__s_$c"), col(s"__t_$c")).as(c)) :+
         when(col("__t_present").isNull, lit("insert"))
@@ -287,14 +293,11 @@ object Lakehouse {
     */
   def snapshotDiff(oldDf: DataFrame, newDf: DataFrame, keys: Seq[String],
                    compareCols: Seq[String]): DataFrame = {
-    def tag(df: DataFrame, side: String): DataFrame =
-      df.select((keys.map(col) ++ compareCols.map(c => col(c).as(s"__${side}_$c")) :+
-        lit(true).as(s"__${side}_present")): _*)
     // concat_ws skips nulls, so the mask concatenates exactly the
     // differing column names in compareCols order
     val mask = concat_ws(",", compareCols.map(c =>
       when(not(col(s"__o_$c") <=> col(s"__n_$c")), lit(c))): _*)
-    tag(oldDf, "o").join(tag(newDf, "n"), keys, "full_outer")
+    tag(oldDf, "o", keys, compareCols).join(tag(newDf, "n", keys, compareCols), keys, "full_outer")
       .withColumn("changed_cols", mask)
       .withColumn("status",
         when(col("__o_present").isNull, lit("added"))
@@ -357,9 +360,6 @@ object Lakehouse {
     */
   def threeWayMerge(base: DataFrame, a: DataFrame, b: DataFrame,
                     keys: Seq[String], valCols: Seq[String]): DataFrame = {
-    def tag(df: DataFrame, side: String): DataFrame =
-      df.select((keys.map(col) ++ valCols.map(c => col(c).as(s"__${side}_$c")) :+
-        lit(true).as(s"__${side}_present")): _*)
     def present(s: String): Column = col(s"__${s}_present").isNotNull
     def eqSides(s1: String, s2: String): Column =
       valCols.map(c => col(s"__${s1}_$c") <=> col(s"__${s2}_$c"))
@@ -370,9 +370,9 @@ object Lakehouse {
         .when(present(s) && !present("base"), "add")
         .when(!present(s) && present("base"), "del")
         .otherwise("absent") // in neither base nor this branch
-    val j = tag(base, "base")
-      .join(tag(a, "a"), keys, "full_outer")
-      .join(tag(b, "b"), keys, "full_outer")
+    val j = tag(base, "base", keys, valCols)
+      .join(tag(a, "a", keys, valCols), keys, "full_outer")
+      .join(tag(b, "b", keys, valCols), keys, "full_outer")
       .withColumn("__sa", state("a"))
       .withColumn("__sb", state("b"))
     val bothSame = col("__sa") === col("__sb") && eqSides("a", "b")
@@ -420,9 +420,6 @@ object Lakehouse {
     */
   def changeDataFeed(oldDf: DataFrame, newDf: DataFrame, keys: Seq[String],
                      valueCols: Seq[String]): DataFrame = {
-    def tag(df: DataFrame, side: String): DataFrame =
-      df.select((keys.map(col) ++ valueCols.map(c => col(c).as(s"__${side}_$c")) :+
-        lit(true).as(s"__${side}_present")): _*)
     val changed = valueCols.map(c => !(col(s"__o_$c") <=> col(s"__n_$c")))
       .reduce(_ || _)
     def image(side: String, op: String) =
@@ -436,7 +433,7 @@ object Lakehouse {
       .when(changed, array(image("o", "update_preimage"),
         image("n", "update_postimage")))
       .otherwise(none)
-    tag(oldDf, "o").join(tag(newDf, "n"), keys, "full_outer")
+    tag(oldDf, "o", keys, valueCols).join(tag(newDf, "n", keys, valueCols), keys, "full_outer")
       .select(keys.map(col) :+ explode(feed).as("__c"): _*)
       .select(keys.map(col) ++ (col("__c._change_type").as("_change_type") +:
         valueCols.map(c => col(s"__c.$c").as(c))): _*)

@@ -94,19 +94,6 @@ object Layout {
          |FROM ($acc)""".stripMargin
     }
 
-  /** [[zorderCluster]] on the Hilbert key: range-partition + sort by
-    * the d-index so every file owns one contiguous, Manhattan-compact
-    * curve segment.
-    */
-  def hilbertCluster(df: DataFrame, x: Column, y: Column, nFiles: Int): DataFrame = {
-    val keyed = df.withColumn("__hkey",
-      graft.expressions.GraftFunctions.hilbertIndex(x, y, 16))
-    keyed
-      .repartitionByRange(nFiles, col("__hkey"))
-      .sortWithinPartitions(col("__hkey"))
-      .drop("__hkey")
-  }
-
   /** Cluster a frame for writing: range-partition by the Z-key of two
     * (bucketized 16-bit) dimensions, sort within partitions. Each
     * output file then owns a compact Z-range ⇒ tight min/max stats on

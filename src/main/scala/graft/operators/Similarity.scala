@@ -19,6 +19,16 @@ import org.apache.spark.sql.functions._
   * partition (map-side partial top-k), so shuffle volume is
   * O(queries × k × partitions) regardless of corpus size. The LSH
   * variant prunes the scored pairs to matching signature buckets first.
+  *
+  * One result contract: every top-k variant returns (query_id,
+  * rank: bigint 1..k, neighbor_id, score rounded to 4 dp), ranked by
+  * score desc then neighbor id asc, the query's own id never among
+  * its neighbors (rerank pools aside). The variants share one query
+  * projection (`probeSide`), one exact score (`cosineScore`: the
+  * 6-dp rounded cosine, null on a zero norm) and one ranking tail
+  * (`rankPerQuery`); each keeps only its candidate generation — all
+  * pairs, IVF cells, LSH buckets, PQ codes (scored by ADC instead) or
+  * a rerank pool.
   */
 object Similarity {
 
@@ -65,40 +75,49 @@ object Similarity {
     override def outputEncoder: Encoder[Seq[Scored]] = ExpressionEncoder()
   }
 
-  /** Brute-force cosine top-k, window form (oracle-checkable baseline).
-    * Self-matches excluded; ties broken by neighbor id.
+  /** The query side every variant probes with: (query_id, q_emb, q_nrm). */
+  private def probeSide(queries: DataFrame): DataFrame =
+    queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
+      norm(col("embedding")).as("q_nrm"))
+
+  /** Exact cosine of a candidate against the [[probeSide]] row, rounded
+    * to 6 dp; a zero norm on either side scores null (ANSI aborts on /0).
     */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val q = broadcast(queries.select(
-      col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-      norm(col("embedding")).as("q_nrm")))
-    val scored = corpus
-      .withColumn("c_nrm", norm(col("embedding")))
-      .join(q, col("vec_id") =!= col("query_id"))
-      .withColumn("score",
-        round(dot(col("q_emb"), col("embedding")) / nullif(col("q_nrm") * col("c_nrm"), lit(0.0)), 6))
+  private def cosineScore(candEmb: Column, candNrm: Column): Column =
+    round(dot(col("q_emb"), candEmb) / nullif(col("q_nrm") * candNrm, lit(0.0)), 6)
+
+  /** The ranking tail of every window-form variant: per query, score
+    * desc then `id` asc, rank <= k, score rounded to 4 dp.
+    */
+  private def rankPerQuery(scored: DataFrame, k: Int, id: String): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
+      .orderBy(col("score").desc, col(id).asc)
     scored
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("vec_id").as("neighbor_id"), round(col("score"), 4).as("score"))
+        col(id).as("neighbor_id"), round(col("score"), 4).as("score"))
   }
+
+  /** Every (corpus row, query) pair but the self-match, scored. */
+  private def allPairsScored(corpus: DataFrame, queries: DataFrame): DataFrame =
+    corpus
+      .withColumn("c_nrm", norm(col("embedding")))
+      .join(broadcast(probeSide(queries)), col("vec_id") =!= col("query_id"))
+      .withColumn("score", cosineScore(col("embedding"), col("c_nrm")))
+
+  /** Brute-force cosine top-k, window form (oracle-checkable baseline).
+    * Self-matches excluded; ties broken by neighbor id.
+    */
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    rankPerQuery(allPairsScored(corpus, queries), k, "vec_id")
 
   /** Brute-force cosine top-k via [[TopKAgg]] — same semantics as
     * [[bruteForceTopK]], scale-friendly shuffle profile.
     */
   def aggregatorTopK(spark: SparkSession, corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val topk = udaf(new TopKAgg(k), ExpressionEncoder[Scored]())
-    val q = broadcast(queries.select(
-      col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-      norm(col("embedding")).as("q_nrm")))
-    corpus
-      .withColumn("c_nrm", norm(col("embedding")))
-      .join(q, col("vec_id") =!= col("query_id"))
-      .withColumn("score",
-        round(dot(col("q_emb"), col("embedding")) / nullif(col("q_nrm") * col("c_nrm"), lit(0.0)), 6))
+    allPairsScored(corpus, queries)
       // a null (zero-norm) score is not rankable: the typed
       // aggregator's primitive Double field would silently coerce it
       // to 0.0, while the window form and the oracle sort nulls last —
@@ -127,23 +146,6 @@ object Similarity {
     bitCols.reduce(_ + _)
   }
 
-  /** IVF (inverted-file) ANN: a coarse quantizer partitions the corpus
-    * into cells; each query exactly-scores only its `nProbe` nearest
-    * cells. The classic billion-scale layout: the corpus is assigned
-    * ONCE (and would be written bucketed-by-cell at rest), per-query
-    * work drops by ~nCells/nProbe, and recall is tunable via nProbe.
-    *
-    * The codebook is Lloyd-trained on a deterministic hash-ordered
-    * SAMPLE of the corpus — how large-scale IVF trains in practice
-    * (quantizers fit on samples, not the full corpus; the fit is a
-    * driver-side loop over ≤2k points). The dictionary-sized result is
-    * folded into LITERAL arrays so cell assignment is a pure
-    * broadcast-free projection over native dots, exactly like the
-    * nearest-city argmin kernel.
-    *
-    * Cell ranking uses dot(q, centroid)/|centroid| — equivalent to
-    * cosine for ranking because |q| is a common positive factor.
-    */
   /** Deterministic hash-ordered sample of corpus vectors — the
     * training set for both quantizers. Bounded driver collect
     * (sampleN rows) regardless of corpus size: quantizers train on
@@ -265,7 +267,6 @@ object Similarity {
   def ivfBucketedTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                       restDir: String, nCells: Int = 16, nProbe: Int = 8): DataFrame = {
     val codebook = sampleCodebook(corpus, nCells)
-    val scores = cellScores(codebook) _
     // Write-once, probe-many: the serving layout is only rewritten when
     // the corpus changed. The marker fingerprints (row count, xor of id
     // hashes, nCells) — an order-independent id-set digest, so content
@@ -282,73 +283,54 @@ object Similarity {
         .write.mode("overwrite").partitionBy("cell").parquet(restDir)
     }
 
-    val probed = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        norm(col("embedding")).as("q_nrm"),
-        explode(slice(reverse(array_sort(scores(col("embedding")))), 1, nProbe)).as("sc"))
-      .select(col("query_id"), col("q_emb"), col("q_nrm"), col("sc.cell").as("cell"))
+    val probed = cellProbe(queries, cellScores(codebook), nProbe)
     val probeCells: Array[Int] = probed.select("cell").distinct()
       .collect().map(_.getInt(0)).sorted
 
     val atRest = corpus.sparkSession.read.parquet(restDir)
       .where(col("cell").isin(probeCells.map(Integer.valueOf).toSeq: _*))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    atRest.join(probed, Seq("cell"))
+    rankPerQuery(atRest.join(probed, Seq("cell"))
       .where(col("vec_id") =!= col("query_id"))
-      .withColumn("score",
-        round(dot(col("q_emb"), col("embedding")) / nullif(col("q_nrm") * col("c_nrm"), lit(0.0)), 6))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("vec_id").as("neighbor_id"), round(col("score"), 4).as("score"))
+      .withColumn("score", cosineScore(col("embedding"), col("c_nrm"))), k, "vec_id")
   }
 
+  /** IVF (inverted-file) ANN: a coarse quantizer partitions the corpus
+    * into cells; each query exactly-scores only its `nProbe` nearest
+    * cells. The classic billion-scale layout: the corpus is assigned
+    * ONCE (and would be written bucketed-by-cell at rest), per-query
+    * work drops by ~nCells/nProbe, and recall is tunable via nProbe.
+    *
+    * The codebook is Lloyd-trained on a deterministic hash-ordered
+    * SAMPLE of the corpus — how large-scale IVF trains in practice
+    * (quantizers fit on samples, not the full corpus; the fit is a
+    * driver-side loop over ≤2k points). The dictionary-sized result is
+    * folded into LITERAL arrays so cell assignment is a pure
+    * broadcast-free projection over native dots, exactly like the
+    * nearest-city argmin kernel.
+    *
+    * Cell ranking uses dot(q, centroid)/|centroid| — equivalent to
+    * cosine for ranking because |q| is a common positive factor.
+    */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               nCells: Int = 16, nProbe: Int = 8): DataFrame = {
     val codebook = sampleCodebook(corpus, nCells)
-    val scores = cellScores(codebook) _
-
-    // Corpus assignment: argmax cell score — zero-shuffle projection.
-    val cells = corpus.select(col("vec_id"), col("embedding"),
-      norm(col("embedding")).as("c_nrm"),
-      array_max(scores(col("embedding"))).getField("cell").as("cell"))
-
-    // Every query probes its nProbe best cells — also a projection:
-    // sort the nCells (score, cell) structs, slice the top, explode.
-    val probed = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        norm(col("embedding")).as("q_nrm"),
-        explode(slice(reverse(array_sort(scores(col("embedding")))), 1, nProbe)).as("sc"))
-      .select(col("query_id"), col("q_emb"), col("q_nrm"), col("sc.cell").as("cell"))
-
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    cells.join(probed, Seq("cell"))
+    // corpus assignment (argmax cell score) and the probe are both
+    // zero-shuffle projections
+    val probed = cellProbe(queries, cellScores(codebook), nProbe)
+    rankPerQuery(assignCellsWith(corpus, codebook).join(probed, Seq("cell"))
       .where(col("vec_id") =!= col("query_id"))
-      .withColumn("score",
-        round(dot(col("q_emb"), col("embedding")) / nullif(col("q_nrm") * col("c_nrm"), lit(0.0)), 6))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("vec_id").as("neighbor_id"), round(col("score"), 4).as("score"))
+      .withColumn("score", cosineScore(col("embedding"), col("c_nrm"))), k, "vec_id")
   }
 
-  /** Product quantization (PQ): split the embedding into `m` subspaces,
-    * quantize each sub-vector against a per-subspace codebook of
-    * `nCodes` centroids, and store only the m small codes per vector —
-    * the classic billion-scale in-RAM layout (m bytes/vector instead of
-    * dim×4). Scoring is ADC (asymmetric distance computation): each
-    * QUERY precomputes one m×nCodes table of sub-dot-products (a tiny
-    * projection), and each candidate costs m table lookups instead of a
-    * dim-wide dot — per-pair work drops dim/m-fold.
-    *
-    * Codebooks are deterministic hash-order samples of the corpus
-    * (same rationale as [[ivfTopK]]'s coarse quantizer: quantizers
-    * train on samples at scale; the dictionary-sized result folds into
-    * literal arrays, so both encode and table-build are zero-shuffle
-    * codegen'd projections).
+  /** The IVF probe: each query's [[probeSide]] row once per cell among
+    * its `nProbe` best — a projection that sorts the nCells
+    * (score, cell) structs, slices the top and explodes their cells.
     */
+  private def cellProbe(queries: DataFrame, scores: Column => Column,
+                        nProbe: Int): DataFrame =
+    probeSide(queries).withColumn("cell", explode(
+      slice(reverse(array_sort(scores(col("q_emb")))), 1, nProbe).getField("cell")))
+
   /** Per-subspace Lloyd-trained codebooks over the shared sample.
     * private[graft] so the randomized PQ differential (SimilaritySpec)
     * can re-derive every encoded code against the SAME books the
@@ -383,7 +365,22 @@ object Similarity {
       .withColumn("recon_nrm", wrap(PqReconNorm(exprOf(col("codes")), cwNormSq)))
   }
 
-  /** PQ/ADC approximate top-k (recall-lossy; recall harness-gated).
+  /** Product quantization (PQ): split the embedding into `m` subspaces,
+    * quantize each sub-vector against a per-subspace codebook of
+    * `nCodes` centroids, and store only the m small codes per vector —
+    * the classic billion-scale in-RAM layout (m bytes/vector instead of
+    * dim×4). Scoring is ADC (asymmetric distance computation): each
+    * QUERY precomputes one m×nCodes table of sub-dot-products (a tiny
+    * projection), and each candidate costs m table lookups instead of a
+    * dim-wide dot — per-pair work drops dim/m-fold.
+    *
+    * Codebooks are deterministic hash-order samples of the corpus
+    * (same rationale as [[ivfTopK]]'s coarse quantizer: quantizers
+    * train on samples at scale; the dictionary-sized result folds into
+    * literal arrays, so both encode and table-build are zero-shuffle
+    * codegen'd projections).
+    *
+    * PQ/ADC approximate top-k (recall-lossy; recall harness-gated).
     * Queries build per-row ADC lookup tables (one native expression)
     * and broadcast; each candidate costs m table lookups instead of a
     * dim-wide dot — all three kernels codegen as single calls.
@@ -397,18 +394,8 @@ object Similarity {
       col("vec_id").as("query_id"),
       norm(col("embedding")).as("q_nrm"),
       wrap(PqAdcTables(exprOf(col("embedding")), books)).as("tables")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    encoded.join(q, col("vec_id") =!= col("query_id"))
-      .withColumn("score", round(
-        // zero-norm contract: a zero query or zero-reconstructing code
-        // word makes the cosine 0/0 — null score (ANSI aborts on /0)
-        wrap(PqAdcScore(exprOf(col("tables")), exprOf(col("codes")), nCodes)) /
-          nullif(col("q_nrm") * col("recon_nrm"), lit(0.0)), 6))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("vec_id").as("neighbor_id"), round(col("score"), 4).as("score"))
+    rankPerQuery(encoded.join(q, col("vec_id") =!= col("query_id"))
+      .withColumn("score", adcScore(nCodes)), k, "vec_id")
   }
 
   /** IVF-PQ: the coarse quantizer prunes candidates to the query's
@@ -439,20 +426,19 @@ object Similarity {
         explode(slice(reverse(array_sort(cScores(col("embedding")))), 1, nProbe)).as("sc"))
       .select(col("query_id"), col("q_nrm"), col("tables"),
         col("sc").getField("cell").as("cell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    encoded.join(broadcast(probed), Seq("cell"))
+    rankPerQuery(encoded.join(broadcast(probed), Seq("cell"))
       .where(col("vec_id") =!= col("query_id"))
-      .withColumn("score", round(
-        // zero-norm contract: a zero query or zero-reconstructing code
-        // word makes the cosine 0/0 — null score (ANSI aborts on /0)
-        wrap(PqAdcScore(exprOf(col("tables")), exprOf(col("codes")), nCodes)) /
-          nullif(col("q_nrm") * col("recon_nrm"), lit(0.0)), 6))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("vec_id").as("neighbor_id"), round(col("score"), 4).as("score"))
+      .withColumn("score", adcScore(nCodes)), k, "vec_id")
   }
+
+  /** The ADC cosine of a PQ candidate (`codes`, `recon_nrm`) against
+    * a probe row's lookup `tables` and `q_nrm`, rounded to 6 dp. A
+    * zero query or zero-reconstructing code word makes the cosine
+    * 0/0 — null score (ANSI aborts on /0).
+    */
+  private def adcScore(nCodes: Int): Column =
+    round(wrap(PqAdcScore(exprOf(col("tables")), exprOf(col("codes")), nCodes)) /
+      nullif(col("q_nrm") * col("recon_nrm"), lit(0.0)), 6)
 
   /** Two-stage retrieval (the production serving shape): IVF-PQ ADC
     * produces a coarse candidate pool of k·`coarseMult` per query,
@@ -480,24 +466,13 @@ object Similarity {
     * Matryoshka prefix).
     */
   def exactRerank(pool: DataFrame, corpus: DataFrame, queries: DataFrame,
-                  k: Int): DataFrame = {
-    val q = broadcast(queries.select(
-      col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-      norm(col("embedding")).as("q_nrm")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    pool.select(col("query_id"), col("neighbor_id"))
+                  k: Int): DataFrame =
+    rankPerQuery(pool.select(col("query_id"), col("neighbor_id"))
       .join(corpus.select(col("vec_id").as("neighbor_id"),
         col("embedding").as("c_emb"), norm(col("embedding")).as("c_nrm")),
         Seq("neighbor_id"))
-      .join(q, Seq("query_id"))
-      .withColumn("score",
-        round(dot(col("q_emb"), col("c_emb")) / nullif(col("q_nrm") * col("c_nrm"), lit(0.0)), 6))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), round(col("score"), 4).as("score"))
-  }
+      .join(broadcast(probeSide(queries)), Seq("query_id"))
+      .withColumn("score", cosineScore(col("c_emb"), col("c_nrm"))), k, "neighbor_id")
 
   /** Matryoshka-style prefix-dimension retrieval (MRL serving): the
     * coarse pass scores only the FIRST `prefixDim` coordinates — half
@@ -694,28 +669,13 @@ object Similarity {
     */
   def lshMultiProbeTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                         dim: Int = 64, nBits: Int = 8): DataFrame = {
-    val sig = (df: DataFrame) =>
-      df.withColumn("sig", lshSignature(col("embedding"), dim, nBits))
-    val q = sig(queries).select(col("sig").as("qsig"),
-        col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        norm(col("embedding")).as("q_nrm"))
-      .select(col("query_id"), col("q_emb"), col("q_nrm"),
-        explode(array((lit(0L) +: (0 until nBits).map(b => lit(1L << b))): _*))
-          .as("flip"),
-        col("qsig"))
+    val q = probeSide(queries)
+      .withColumn("qsig", lshSignature(col("q_emb"), dim, nBits))
+      .withColumn("flip",
+        explode(array((lit(0L) +: (0 until nBits).map(b => lit(1L << b))): _*)))
       .withColumn("sig", col("qsig").bitwiseXOR(col("flip")))
       .drop("qsig", "flip")
-    val c = sig(corpus).withColumn("c_nrm", norm(col("embedding")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    c.join(q, Seq("sig"))
-      .where(col("vec_id") =!= col("query_id"))
-      .withColumn("score",
-        round(dot(col("q_emb"), col("embedding")) / nullif(col("q_nrm") * col("c_nrm"), lit(0.0)), 6))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("vec_id").as("neighbor_id"), round(col("score"), 4).as("score"))
+    bucketTopK(corpus, q, k, dim, nBits)
   }
 
   /** LSH-bucketed ANN: exact cosine top-k within matching signature
@@ -723,21 +683,20 @@ object Similarity {
     * path when queries are too many to broadcast-score the corpus.
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              dim: Int = 64, nBits: Int = 8): DataFrame = {
-    val sig = (df: DataFrame) => df.withColumn("sig", lshSignature(col("embedding"), dim, nBits))
-    val q = sig(queries).select(col("sig"),
-      col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-      norm(col("embedding")).as("q_nrm"))
-    val c = sig(corpus).withColumn("c_nrm", norm(col("embedding")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    c.join(q, Seq("sig"))
+              dim: Int = 64, nBits: Int = 8): DataFrame =
+    bucketTopK(corpus,
+      probeSide(queries).withColumn("sig", lshSignature(col("q_emb"), dim, nBits)),
+      k, dim, nBits)
+
+  /** Exact cosine top-k of each probe row (a [[probeSide]] row plus the
+    * `sig` bucket it probes) over the corpus rows hashed to that bucket.
+    */
+  private def bucketTopK(corpus: DataFrame, probes: DataFrame, k: Int,
+                         dim: Int, nBits: Int): DataFrame =
+    rankPerQuery(corpus
+      .withColumn("sig", lshSignature(col("embedding"), dim, nBits))
+      .withColumn("c_nrm", norm(col("embedding")))
+      .join(probes, Seq("sig"))
       .where(col("vec_id") =!= col("query_id"))
-      .withColumn("score",
-        round(dot(col("q_emb"), col("embedding")) / nullif(col("q_nrm") * col("c_nrm"), lit(0.0)), 6))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("vec_id").as("neighbor_id"), round(col("score"), 4).as("score"))
-  }
+      .withColumn("score", cosineScore(col("embedding"), col("c_nrm"))), k, "vec_id")
 }

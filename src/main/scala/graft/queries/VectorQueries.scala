@@ -446,9 +446,10 @@ object VectorQueries {
     // assignment): the clustering stage of SemDeDup-style curation.
     // Fixed-point coordinates make every round BIGINT-deterministic,
     // so the oracle unrolls the same rounds as chained CTEs and the
-    // full per-vector assignment matches bit for bit. Assignment is a
-    // zero-shuffle map (centroids ride the plan as literals); each
-    // round's only exchange is the map-side-combined centroid-sum agg.
+    // full per-vector assignment matches bit for bit. Each round is
+    // one treeAggregate job over the persisted quantized rows, with no
+    // exchange and no re-scan; assignment is a zero-shuffle map (the
+    // centroid table is one native-expression constant).
     "cluster_kmeans" -> ((spark, dir) => {
       Clustering.assignToCentroids(Tables.embeddings(spark, dir),
         "vec_id", "embedding",

@@ -4,10 +4,11 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Bridge to the sql-private Column↔Expression converters, for graft's
-  * native expressions that carry non-literal state (PQ codebooks) and
-  * therefore can't go through the FunctionRegistry path that
-  * [[graft.expressions.GraftFunctions]] uses.
+/** Bridge to the sql-private Column↔Expression converters: the one
+  * way graft binds a driver-held table (PQ codebooks, k-means
+  * centroids, BPE ranks, bloom bits) into a native expression, which
+  * the FunctionRegistry path of [[graft.expressions.GraftFunctions]]
+  * could only carry as literals.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

@@ -66,7 +66,7 @@ class IoSpec extends SparkSpec {
       assert(payloads.size === 1, s"round $round: mixed payloads $payloads")
       // no staging leftovers beside the mart
       val leftovers = new java.io.File(dir).getParentFile.listFiles()
-        .filter(_.getName.contains("_staging_"))
+        .filter(_.getName.contains("_staging"))
       assert(leftovers.isEmpty, leftovers.mkString(","))
     }
   }

@@ -77,4 +77,17 @@ class PublishSwapSpec extends SparkSpec {
     assert(rows === Seq((1L, "old"), (2L, "old")))
     assert(!new java.io.File(new java.io.File(dir).getParent, ".dm__old").exists())
   }
+
+  test("writeDatamart: the next clean write clears a failed write's staging dir") {
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration.set("fs.failpub.impl", classOf[FailPublishFs].getName)
+    val root = Files.createTempDirectory("graft_sink_stage").toFile
+    val dir = root.toString + "/dm"
+    intercept[java.io.IOException] {
+      Sinks.writeDatamart(Seq((1L, "failed")).toDF("id", "v"), "failpub://" + dir)
+    }
+    assert(!Sinks.writeDatamart(Seq((2L, "clean")).toDF("id", "v"), dir))
+    assert(root.list().toSet === Set("dm"))
+    assert(spark.read.parquet(dir).as[(Long, String)].collect().toSeq === Seq((2L, "clean")))
+  }
 }

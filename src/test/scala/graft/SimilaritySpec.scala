@@ -292,4 +292,49 @@ class SimilaritySpec extends SparkSpec {
     val cellsRead = probed.select("cell").distinct().collect().map(_.getInt(0)).toSet
     assert(cellsRead.subsetOf(Set(1, 3)))
   }
+
+  test("exact-cosine top-k variants share one result contract on duplicate vectors") {
+    import spark.implicits._
+    // 10 directions stored 3 times each (ids d, d+10, d+20): every query
+    // ties exactly with its own copies and with the copies of each
+    // direction it ranks
+    val dirs = (0 until 10).map(d => Array.tabulate(64)(j => math.sin(d * 64 + j * 1.7).toFloat))
+    val corpus = (0L until 30L).map(id => (id, dirs((id % 10).toInt))).toDF("vec_id", "embedding")
+    val qs = corpus.where(col("vec_id") % 4 === 0)
+    val qIds = (0L until 30L by 4).toSet
+    val k = 5
+    val pool = qs.select(col("vec_id").as("query_id"))
+      .crossJoin(corpus.select(col("vec_id").as("neighbor_id")))
+      .where(col("query_id") =!= col("neighbor_id"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.as[(Long, Long, Long, Double)].collect().toSeq
+    val brute = rows(Similarity.bruteForceTopK(corpus, qs, k))
+    // every candidate probed or pooled: IVF and rerank ARE brute force
+    val full = Seq(
+      "brute" -> brute,
+      "ivf" -> rows(Similarity.ivfTopK(corpus, qs, k, nCells = 4, nProbe = 4)),
+      "rerank" -> rows(Similarity.exactRerank(pool, corpus, qs, k)))
+    full.foreach { case (name, rs) => assert(rs.toSet === brute.toSet, name) }
+    val lossy = Seq(
+      "lsh" -> rows(Similarity.lshTopK(corpus, qs, k)),
+      "multiprobe" -> rows(Similarity.lshMultiProbeTopK(corpus, qs, k)))
+    (full ++ lossy).foreach { case (name, rs) =>
+      assert(rs.map(_._1).toSet === qIds, name)
+      rs.groupBy(_._1).foreach { case (q, qrs) =>
+        val ranked = qrs.sortBy(_._2)
+        val ctx = s"$name, query $q: $ranked"
+        // ranks 1..n without gaps; n = k unless the buckets run short,
+        // and a query's two copies always share its bucket
+        assert(ranked.map(_._2) === (1L to ranked.size.toLong), ctx)
+        assert(ranked.size === k || (lossy.toMap.contains(name) && ranked.size >= 2), ctx)
+        assert(!ranked.exists(_._3 == q), ctx)
+        assert(ranked.map(_._4) === ranked.map(_._4).sorted(Ordering[Double].reverse), ctx)
+        // copies of one direction score equal and rank in id order
+        ranked.groupBy(_._3 % 10).values.foreach { copies =>
+          assert(copies.map(_._4).distinct.size === 1, ctx)
+          assert(copies.map(_._3) === copies.map(_._3).sorted, ctx)
+        }
+        assert(ranked.take(2).map(_._4) === Seq(1.0, 1.0), ctx)
+      }
+    }
+  }
 }
