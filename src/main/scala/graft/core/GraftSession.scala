@@ -28,12 +28,22 @@ object GraftSession {
       // graft's native Catalyst expressions (token_fingerprint, ...)
       .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      // saveAsTable targets (bucketed at-rest layouts) land in tmp, not
-      // the working directory; on a cluster the deployment overrides
-      // this with the real warehouse root.
-      .config("spark.sql.warehouse.dir",
-        new java.io.File(sys.props("java.io.tmpdir"), "graft_warehouse").toString)
+      .config("spark.sql.warehouse.dir", warehouseDir.toString)
       .config("spark.ui.enabled", "false")
+
+  /** saveAsTable targets (bucketed at-rest layouts) land in tmp, not
+    * the working directory, under one subdirectory per JVM: two
+    * processes that save the same bucketed table would otherwise
+    * overwrite each other's files. The directory is removed when the
+    * JVM exits. On a cluster the deployment overrides the conf with
+    * the real warehouse root.
+    */
+  private lazy val warehouseDir: java.io.File = {
+    val dir = new java.io.File(new java.io.File(sys.props("java.io.tmpdir"), "graft_warehouse"),
+      ProcessHandle.current().pid().toString)
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
+    dir
+  }
 
   /** The one session factory: every main, the specs and the bench
     * build their session here. Local mode with `cores` task threads

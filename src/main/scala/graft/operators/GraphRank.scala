@@ -149,8 +149,66 @@ object GraphRank {
     rankLoop(g.eDeg, nodes, r0, when(col("seed"), lit(base)).otherwise(lit(0L)), iters)
   }
 
+  /** The loop-invariant artifacts every undirected-graph operator
+    * reads, built ONCE by [[prepareUndirected]] and shared across calls
+    * (the undirected counterpart of [[PreparedGraph]]):
+    *
+    *  - `canon` (a, b): canonical edges, `a < b`, no self-loops, no
+    *    duplicates;
+    *  - `adj` (src, dst, deg): the symmetric adjacency, both
+    *    orientations of every canonical edge, with `deg` = degree of
+    *    `src`, hash-partitioned by `src` (the planner does not know
+    *    it: a checkpoint under AQE reports no partitioning);
+    *  - `deg` (node, deg): the degree of every non-isolated node;
+    *  - `orient` (u, v, dv): each edge once, pointing from its
+    *    (degree, id)-smaller endpoint `u` to the larger `v`, with
+    *    `dv` = degree of `v`;
+    *  - `m`: the canonical edge count.
+    *
+    * Every table is checkpointed, so a consumer pays only its own
+    * loop, wedge step or scoring tail — never the canonicalization
+    * shuffle, the degree aggregate or the orientation joins again.
+    */
+  case class UndirectedGraph(canon: DataFrame, adj: DataFrame, deg: DataFrame,
+                             orient: DataFrame, m: Long)
+
+  def prepareUndirected(edges: DataFrame, srcCol: String, dstCol: String): UndirectedGraph = {
+    val raw = canonical(edges, srcCol, dstCol).truncateLineage()
+    val m = raw.count()
+    // every table below holds at most 2m rows: hand the planner that
+    // bound, so consumers broadcast a small graph instead of shuffling
+    // it first (the checkpoint would keep its plan's join estimate)
+    def pinned(df: DataFrame, maxRows: Long): DataFrame =
+      org.apache.spark.sql.graft.StatsBridge.withMaxRows(df.truncateLineage(), maxRows)
+    val canon = org.apache.spark.sql.graft.StatsBridge.withMaxRows(raw, m)
+    // the degree is a window over src: its one shuffle both partitions
+    // the adjacency by src and counts every node's neighbors
+    val adj = pinned(canon.select(col("a").as("src"), col("b").as("dst"))
+      .unionByName(canon.select(col("b").as("src"), col("a").as("dst")))
+      .withColumn("deg", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("src")))), 2 * m)
+    val deg = pinned(adj.select(col("src").as("node"), col("deg")).distinct(), 2 * m)
+    // Orient by (degree, id): strict total order, so each undirected
+    // edge survives in exactly one orientation, pointing at the
+    // "heavier" endpoint.
+    val orient = pinned(adj
+      .join(deg.select(col("node").as("dst"), col("deg").as("dv")), "dst")
+      .where(struct(col("deg"), col("src")) < struct(col("dv"), col("dst")))
+      .select(col("src").as("u"), col("dst").as("v"), col("dv")), m)
+    UndirectedGraph(canon, adj, deg, orient, m)
+  }
+
   /** Canonical undirected edge list: self-loops dropped, both input
-    * orientations collapsed onto `a < b`, duplicates removed. */
+    * orientations collapsed onto `a < b`, duplicates removed. Runs
+    * only inside [[prepareUndirected]].
+    */
+  private def canonical(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+    val s = col(srcCol); val d = col(dstCol)
+    edges.where(s =!= d)
+      .select(least(s, d).as("a"), greatest(s, d).as("b"))
+      .distinct()
+  }
+
   /** Deterministic hash-driven random walks (the DeepWalk/node2vec
     * sampling primitive without RNG state): one walk starts at every
     * node with id ≡ 0 (mod `seedMod`); at step t the walk at node v
@@ -161,8 +219,9 @@ object GraphRank {
     * oracle unrolls the SAME `steps` rounds as chained CTEs and
     * matches bit for bit.
     *
-    * Scale shape: the ranked adjacency (dst rank + degree per src)
-    * materializes ONCE, partitioned by src; every step is a single
+    * Scale shape: the ranked adjacency (the prepared adjacency plus
+    * each dst's rank within its src) materializes ONCE per call,
+    * partitioned by src; every step is a single
     * walk-front⋈adjacency equi-join on src — the front stays at seed
     * cardinality, never corpus-sized, and the driver loops over
     * STEPS only. The symmetrized edge list guarantees deg ≥ 1 for
@@ -171,22 +230,15 @@ object GraphRank {
     * Returns (walk_id, step, node): the step-0 seed row plus one row
     * per step per walk.
     */
-  def randomWalks(edges: DataFrame, srcCol: String, dstCol: String,
-                  seedMod: Int, steps: Int): DataFrame = {
+  def randomWalks(g: UndirectedGraph, seedMod: Int, steps: Int): DataFrame = {
     require(steps >= 1 && steps <= 50, s"steps must be 1..50, got $steps")
     require(seedMod >= 1, s"seedMod must be >= 1, got $seedMod")
     val P = 2147483647L
-    val canon = canonical(edges, srcCol, dstCol)
-    val sym = canon.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(canon.select(col("b").as("src"), col("a").as("dst")))
-    val bySrc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("src"))
-    val adj = sym.select(col("src"), col("dst"),
-        row_number().over(bySrc.orderBy(col("dst"))).as("rn"),
-        count(lit(1)).over(bySrc).as("deg"))
-      .repartition(col("src"))
+    val adj = g.adj
+      .withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("src")).orderBy(col("dst"))))
       .truncateLineage()
-    var walks = adj.select(col("src").as("node")).distinct()
+    var walks = g.deg.select(col("node"))
       .where(col("node") % seedMod === 0)
       .select(col("node").as("walk_id"), lit(0).as("step"), col("node"))
     var front = walks
@@ -218,16 +270,12 @@ object GraphRank {
     * Returns (node, dist) for nodes within `rounds` hops of a seed;
     * unreached nodes are absent (their distance is unknown, not ∞).
     */
-  def bfsDistances(edges: DataFrame, srcCol: String, dstCol: String,
+  def bfsDistances(g: UndirectedGraph,
                    seedPred: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
                    rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 50, s"rounds must be 1..50, got $rounds")
-    val canon = canonical(edges, srcCol, dstCol)
-    val sym = canon.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(canon.select(col("b").as("src"), col("a").as("dst")))
-      .repartition(col("src"))
-      .truncateLineage()
-    var dist = sym.select(col("src").as("node")).distinct()
+    val sym = g.adj
+    var dist = g.deg.select(col("node"))
       .where(seedPred(col("node")))
       .select(col("node"), lit(0L).as("dist"))
     var frontier = dist.select(col("node"))
@@ -248,13 +296,6 @@ object GraphRank {
     dist
   }
 
-  private def canonical(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val s = col(srcCol); val d = col(dstCol)
-    edges.where(s =!= d)
-      .select(least(s, d).as("a"), greatest(s, d).as("b"))
-      .distinct()
-  }
-
   /** Exact per-node triangle counts via degree orientation (the
     * compact-forward / MR "partitioned wedge" algorithm): orient each
     * undirected edge from the (degree, id)-smaller endpoint to the
@@ -264,9 +305,10 @@ object GraphRank {
     * known for exact enumeration — instead of Σ deg² on the raw
     * adjacency (hub nodes never fan out their full neighborhood).
     *
-    * Shuffle profile: degree agg and the orientation joins run at
-    * EDGE cardinality, but the closing join runs at WEDGE cardinality
-    * — O(m^1.5) rows hashed on (x, y) — and dominates at scale; the
+    * Shuffle profile: the orientation is prepared once
+    * ([[UndirectedGraph]]), so per call only the wedge step runs; its
+    * closing join runs at WEDGE cardinality — O(m^1.5) rows hashed on
+    * (x, y) — and dominates at scale; the
     * orientation bound is exactly what keeps that wedge stream from
     * degenerating to Σ deg² on hub nodes. Counts are exact integers,
     * so any engine enumerating the same undirected graph (the oracle
@@ -275,26 +317,8 @@ object GraphRank {
     *
     * Returns (node, n_triangles) for every node on ≥1 triangle.
     */
-  def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    // canon feeds the degree agg AND the orientation join — pin it
-    // once so the dedup shuffle isn't recomputed per consumer.
-    val canon = canonical(edges, srcCol, dstCol).truncateLineage()
-    val deg = canon.select(col("a").as("n"))
-      .unionByName(canon.select(col("b").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("d"))
-    // Orient by (degree, id): strict total order, so each undirected
-    // edge appears exactly once, pointing at the "heavier" endpoint.
-    val orient = canon
-      .join(deg.select(col("n").as("a"), col("d").as("da")), "a")
-      .join(deg.select(col("n").as("b"), col("d").as("db")), "b")
-      .select(
-        when(struct(col("da"), col("a")) < struct(col("db"), col("b")), col("a"))
-          .otherwise(col("b")).as("u"),
-        when(struct(col("da"), col("a")) < struct(col("db"), col("b")), col("b"))
-          .otherwise(col("a")).as("v"),
-        when(struct(col("da"), col("a")) < struct(col("db"), col("b")), col("db"))
-          .otherwise(col("da")).as("dv"))
-      .truncateLineage()
+  def triangleCounts(g: UndirectedGraph): DataFrame = {
+    val orient = g.orient
     // Wedges from each pivot u: unordered out-neighbor pairs, emitted
     // in (degree, id) order so the closing edge is oriented x → y.
     val o1 = orient.select(col("u"), col("v").as("x"), col("dv").as("dx"))
@@ -328,11 +352,10 @@ object GraphRank {
     * edge-cardinality shuffles, driver loops over ROUNDS only.
     * Lineage is truncated periodically like [[pageRank]].
     */
-  def kCore(edges: DataFrame, srcCol: String, dstCol: String,
-            k: Int, rounds: Int): DataFrame = {
+  def kCore(g: UndirectedGraph, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1 && rounds <= 50,
       s"need k >= 1, 1 <= rounds <= 50; got k=$k rounds=$rounds")
-    var cur = canonical(edges, srcCol, dstCol).truncateLineage()
+    var cur = g.canon
     var r = 0
     while (r < rounds) {
       val deg = cur.select(col("a").as("n"))
@@ -376,23 +399,17 @@ object GraphRank {
     * (node, label)-keyed count + per-node `max_by` argmax) — every
     * stage partitions by node and both aggregations map-side combine;
     * the argmax rides the count agg's output (≤ per-node NDV rows),
-    * never a window sort. The symmetrized edge list materializes once
-    * and every round joins against it; labels stay node-cardinality.
+    * never a window sort. Every round joins against the prepared
+    * symmetric adjacency; labels stay node-cardinality.
     * Driver loops over ROUNDS only; lineage truncates periodically
     * like [[pageRank]].
     */
-  def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-                       rounds: Int): DataFrame = {
+  def labelPropagation(g: UndirectedGraph, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 50, s"rounds must be 1..50, got $rounds")
-    val canon = canonical(edges, srcCol, dstCol)
-    val e = canon.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(canon.select(col("b").as("src"), col("a").as("dst")))
-      .repartition(col("src"))
-      .truncateLineage()
-    // every non-isolated node appears as src in the symmetrized list,
-    // so the per-round join needs no outer branch
-    var labels = e.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
+    val e = g.adj
+    // every non-isolated node appears as src in the symmetric
+    // adjacency, so the per-round join needs no outer branch
+    var labels = g.deg.select(col("node"), col("node").as("label"))
     var r = 0
     while (r < rounds) {
       val counted = e
@@ -432,37 +449,22 @@ object GraphRank {
     * Jaccard denominator stay UNCAPPED — the cap changes which
     * wedges enumerate, never a node's true degree.
     *
-    * Scale: one degree agg, one (middle-keyed) self-join at
-    * Σ min(deg, cap)² wedge cardinality, one pair agg, one anti-join
-    * — all key-shuffled, nothing driver-side.
+    * Scale: the degrees ride the prepared adjacency, so per call one
+    * (middle-keyed) self-join at Σ min(deg, cap)² wedge cardinality,
+    * one pair agg, one anti-join — all key-shuffled, nothing
+    * driver-side.
     */
-  /** @param assumeCanonical skip the least/greatest+distinct
-    *        canonicalization when the caller guarantees the edge list
-    *        is already id-ordered (src < dst) and duplicate-free —
-    *        e.g. the output of a pair-aggregating join. Saves one
-    *        edge-cardinality exchange; semantics are identical on a
-    *        genuinely canonical input.
-    */
-  def linkPrediction(edges: DataFrame, srcCol: String, dstCol: String,
-                     topK: Int,
-                     maxMiddleDegree: Option[Long] = None,
-                     assumeCanonical: Boolean = false): DataFrame = {
+  def linkPrediction(g: UndirectedGraph, topK: Int,
+                     maxMiddleDegree: Option[Long] = None): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     require(maxMiddleDegree.forall(_ >= 2),
       s"maxMiddleDegree below 2 excludes every possible middle")
-    val canon =
-      if (assumeCanonical)
-        edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      else canonical(edges, srcCol, dstCol)
-    val sym = canon.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(canon.select(col("b").as("src"), col("a").as("dst")))
-    val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val middleDeg = maxMiddleDegree
-      .map(cap => deg.where(col("deg") <= cap)).getOrElse(deg)
+    val middles = maxMiddleDegree
+      .map(cap => g.adj.where(col("deg") <= cap)).getOrElse(g.adj)
     // deg-1 leaves can never be the middle of a wedge (they have a
     // single neighbor), so their weight is unread — but it must not
     // EVALUATE as 1/log2(1) under ANSI division
-    val e = sym.join(middleDeg, "src")
+    val e = middles
       .select(col("src").as("v"), col("dst").as("n"),
         when(col("deg") >= 2,
           floor(lit(1000000.0) / log2(col("deg"))).cast("long"))
@@ -473,11 +475,11 @@ object GraphRank {
         col("p.v") === col("q.v") && col("p.n") < col("q.n"))
       .groupBy(col("p.n").as("x"), col("q.n").as("y"))
       .agg(count(lit(1)).as("cn"), sum(col("p.w")).as("aa_x1e6"))
-      .join(canon.select(col("a").as("x"), col("b").as("y")),
+      .join(g.canon.select(col("a").as("x"), col("b").as("y")),
         Seq("x", "y"), "left_anti")
     cand
-      .join(deg.select(col("src").as("x"), col("deg").as("dx")), "x")
-      .join(deg.select(col("src").as("y"), col("deg").as("dy")), "y")
+      .join(g.deg.select(col("node").as("x"), col("deg").as("dx")), "x")
+      .join(g.deg.select(col("node").as("y"), col("deg").as("dy")), "y")
       .withColumn("jacc_x1e6", expr("(cn * 1000000) div (dx + dy - cn)"))
       .select(col("x"), col("y"), col("cn"), col("jacc_x1e6"), col("aa_x1e6"))
       .orderBy(col("cn").desc, col("aa_x1e6").desc, col("x"), col("y"))

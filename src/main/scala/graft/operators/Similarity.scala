@@ -356,12 +356,18 @@ object Similarity {
     * method limits and silently de-optimizes the whole stage — see
     * graft.expressions.PqKernels).
     */
-  def pqEncode(corpus: DataFrame, dim: Int = 64, m: Int = 16, nCodes: Int = 32): DataFrame = {
-    val subDim = dim / m
-    val books = pqCodebooks(corpus, m, subDim, nCodes)
+  def pqEncode(corpus: DataFrame, dim: Int = 64, m: Int = 16, nCodes: Int = 32): DataFrame =
+    encodeWith(corpus, pqCodebooks(corpus, m, dim / m, nCodes))
+
+  /** [[pqEncode]] against already-fitted `books`: (vec_id, codes,
+    * `extra`..., recon_nrm). Callers that also need the books for
+    * their query side fit once and pass them here.
+    */
+  private def encodeWith(corpus: DataFrame, books: Array[Array[Array[Double]]],
+                         extra: Column*): DataFrame = {
     val cwNormSq = books.map(_.map(w => w.map(x => x * x).sum))
-    corpus.select(col("vec_id"),
-      wrap(PqEncode(exprOf(col("embedding")), books)).as("codes"))
+    corpus.select(col("vec_id") +:
+        wrap(PqEncode(exprOf(col("embedding")), books)).as("codes") +: extra: _*)
       .withColumn("recon_nrm", wrap(PqReconNorm(exprOf(col("codes")), cwNormSq)))
   }
 
@@ -387,9 +393,8 @@ object Similarity {
     */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
              dim: Int = 64, m: Int = 16, nCodes: Int = 32): DataFrame = {
-    val subDim = dim / m
-    val books = pqCodebooks(corpus, m, subDim, nCodes)
-    val encoded = pqEncode(corpus, dim, m, nCodes)
+    val books = pqCodebooks(corpus, m, dim / m, nCodes)
+    val encoded = encodeWith(corpus, books)
     val q = broadcast(queries.select(
       col("vec_id").as("query_id"),
       norm(col("embedding")).as("q_nrm"),
@@ -412,13 +417,9 @@ object Similarity {
                 dim: Int = 64, m: Int = 16, nCodes: Int = 32,
                 nCells: Int = 16, nProbe: Int = 8): DataFrame = {
     val cScores = cellScores(sampleCodebook(corpus, nCells)) _
-    val subDim = dim / m
-    val books = pqCodebooks(corpus, m, subDim, nCodes)
-    val cwNormSq = books.map(_.map(w => w.map(x => x * x).sum))
-    val encoded = corpus.select(col("vec_id"),
-        wrap(PqEncode(exprOf(col("embedding")), books)).as("codes"),
-        array_max(cScores(col("embedding"))).getField("cell").as("cell"))
-      .withColumn("recon_nrm", wrap(PqReconNorm(exprOf(col("codes")), cwNormSq)))
+    val books = pqCodebooks(corpus, m, dim / m, nCodes)
+    val encoded = encodeWith(corpus, books,
+      array_max(cScores(col("embedding"))).getField("cell").as("cell"))
     val probed = queries.select(
         col("vec_id").as("query_id"),
         norm(col("embedding")).as("q_nrm"),

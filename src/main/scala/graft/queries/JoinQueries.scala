@@ -331,7 +331,7 @@ object JoinQueries {
     // self-join, so results match bit for bit.
     "graph_triangles" -> ((spark, dir) => {
       import graft.operators.GraphRank
-      GraphRank.triangleCounts(coPurchaseEdges(spark, dir), "a", "b")
+      GraphRank.triangleCounts(coPurchaseGraph(spark, dir))
     }),
 
     // k-core peeling (k=2, 4 fixed rounds) over the same co-purchase
@@ -342,31 +342,28 @@ object JoinQueries {
     // meets the degree bound even where peeling hasn't converged.
     "graph_kcore" -> ((spark, dir) => {
       import graft.operators.GraphRank
-      GraphRank.kCore(coPurchaseEdges(spark, dir), "a", "b",
-        k = KcoreK, rounds = KcoreRounds)
+      GraphRank.kCore(coPurchaseGraph(spark, dir), k = KcoreK, rounds = KcoreRounds)
     }),
 
     // Link prediction over the co-purchase graph: score NON-edges by
     // common-neighbor count, fixed-point Jaccard, and Adamic-Adar —
     // GraphRank.linkPrediction. Wedge enumeration is Σ deg(v)² over
-    // middle vertices — kept sane here by coPurchaseEdges' RELATIVE
+    // middle vertices — kept sane here by coPurchaseGraph's RELATIVE
     // support threshold (density is scale-stable by construction), so
     // the raw-crawl hub cap (maxMiddleDegree) stays disengaged and
     // the oracle replays the FULL wedge set; the cap's exclusion
     // semantics are spec-pinned in GraphRankSpec.
     "graph_link_prediction" -> ((spark, dir) => {
       import graft.operators.GraphRank
-      // coPurchaseEdges is pair-aggregated with a < b by construction
-      // — assumeCanonical skips a redundant edge-cardinality distinct
-      GraphRank.linkPrediction(coPurchaseEdges(spark, dir), "a", "b",
-        topK = 30, maxMiddleDegree = None, assumeCanonical = true)
+      GraphRank.linkPrediction(coPurchaseGraph(spark, dir), topK = 30,
+        maxMiddleDegree = None)
     }),
 
     // Market-basket association rules (support/confidence/lift — the
     // a-priori first round): distinct (order, part) items, id-ordered
     // within-basket pairs at RELATIVE support max(2, nBaskets div
     // 75000) — support as a fraction of baskets, the a-priori
-    // definition (the same scale rule as coPurchaseEdges: an absolute
+    // definition (the same scale rule as coPurchaseGraph: an absolute
     // count threshold on a statistic whose expectation grows with
     // basket volume stops filtering at scale; here the candidate SET
     // is bounded by catalog² either way, but the rule set itself
@@ -422,7 +419,7 @@ object JoinQueries {
     // SAME 4 steps as chained CTEs, bit for bit.
     "graph_random_walks" -> ((spark, dir) => {
       import graft.operators.GraphRank
-      GraphRank.randomWalks(coPurchaseEdges(spark, dir), "a", "b",
+      GraphRank.randomWalks(coPurchaseGraph(spark, dir),
         seedMod = RwSeedMod, steps = RwSteps)
     }),
 
@@ -440,23 +437,20 @@ object JoinQueries {
     "graph_modularity" -> ((spark, dir) => {
       import graft.operators.GraphRank
       import graft.core.GraftSession.LineageOps
-      // canon feeds the label rounds, the intra pass, AND the degree
-      // pass; labels feed two joins. The shared co-purchase memo is
-      // already checkpointed — no second materialization here.
-      val canon = coPurchaseEdges(spark, dir)
-      val labels = GraphRank.labelPropagation(canon, "a", "b", rounds = LpaRounds)
+      // the prepared graph feeds the label rounds (adjacency), the
+      // intra pass (canonical edges) and the degree pass, all already
+      // checkpointed; labels feed two joins, so they are pinned once.
+      val g = coPurchaseGraph(spark, dir)
+      val labels = GraphRank.labelPropagation(g, rounds = LpaRounds)
         .truncateLineage()
-      val m = canon.count() // graph scalar, known pre-plan
-      val withA = canon
+      val m = g.m
+      val withA = g.canon
         .join(labels.select(col("node").as("a"), col("label").as("la")), "a")
         .join(labels.select(col("node").as("b"), col("label").as("lb")), "b")
       val intra = withA.where(col("la") === col("lb"))
         .groupBy(col("la").as("label"))
         .agg(count(lit(1)).as("intra_edges"))
-      val degs = canon.select(col("a").as("node"))
-        .unionByName(canon.select(col("b").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("deg"))
-      val comm = labels.join(degs, "node")
+      val comm = labels.join(g.deg, "node")
         .groupBy("label")
         .agg(count(lit(1)).as("n_nodes"), sum(col("deg")).as("deg_sum"))
       comm.join(intra, Seq("label"), "left")
@@ -478,7 +472,7 @@ object JoinQueries {
     // settled set. The oracle unrolls the SAME rounds, bit for bit.
     "graph_bfs_distances" -> ((spark, dir) => {
       import graft.operators.GraphRank
-      GraphRank.bfsDistances(coPurchaseEdges(spark, dir), "a", "b",
+      GraphRank.bfsDistances(coPurchaseGraph(spark, dir),
         n => n % 10 === 0, rounds = 4)
     }),
 
@@ -490,8 +484,7 @@ object JoinQueries {
     // SAME 3 rounds as chained CTEs and matches bit for bit.
     "graph_labelprop" -> ((spark, dir) => {
       import graft.operators.GraphRank
-      GraphRank.labelPropagation(coPurchaseEdges(spark, dir), "a", "b",
-        rounds = LpaRounds)
+      GraphRank.labelPropagation(coPurchaseGraph(spark, dir), rounds = LpaRounds)
     }),
 
     // Runtime bloom-filter join pruning: the non-broadcastable-dim
@@ -544,39 +537,40 @@ object JoinQueries {
     * evaluates to the original 2, so gate-tier results are unchanged.
     * nBaskets is a single-row pre-plan aggregate (the
     * basket_association_rules pattern), never a corpus collect, and
-    * it runs only inside the memoized edge build below, so the eight
+    * it runs only inside the memoized graph build below, so the seven
     * graph queries that share this helper pay it once per build.
     * The order-key equi-join runs at lineitem cardinality; the
-    * group-by collapses to pair cardinality before any graph work. */
-  // Seven graph queries consume the co-purchase edge list and two more
-  // consume the supplier⇄customer ranking artifacts; the gate and the
-  // bench run them all in ONE process, so the materialized artifacts
-  // are memoized on their input tables' stamps — the quadratic basket
-  // self-join and the ranking loops' eDeg/nodes checkpoints are paid
-  // once per session and input snapshot, not once per query (verdict
-  // r14 item 6: this trims the graph tier ~20% with zero semantic
-  // change; every oracle is unchanged). Key and replacement semantics:
-  // [[graft.core.ArtifactMemo]].
-  private val coPurchaseMemo = new graft.core.ArtifactMemo[DataFrame]
+    * group-by collapses to pair cardinality before any graph work,
+    * and [[graft.operators.GraphRank.prepareUndirected]] turns the
+    * pairs into the canonical edges, adjacency, degrees and
+    * orientation every consumer reads. */
+  // Seven graph queries consume the prepared co-purchase graph and two
+  // more consume the supplier⇄customer ranking artifacts; the gate and
+  // the bench run them all in ONE process, so the materialized
+  // artifacts are memoized on their input tables' stamps — the
+  // quadratic basket self-join, the canonicalization, the degree
+  // aggregate, the orientation and the ranking loops' eDeg/nodes
+  // checkpoints are paid once per session and input snapshot, not once
+  // per query. Key and replacement semantics: [[graft.core.ArtifactMemo]].
+  private val coPurchaseMemo =
+    new graft.core.ArtifactMemo[graft.operators.GraphRank.UndirectedGraph]
   private val scGraphMemo =
     new graft.core.ArtifactMemo[graft.operators.GraphRank.PreparedGraph]
 
-  private def coPurchaseEdges(spark: org.apache.spark.sql.SparkSession,
-                              dir: String): DataFrame =
+  private def coPurchaseGraph(spark: org.apache.spark.sql.SparkSession,
+                              dir: String): graft.operators.GraphRank.UndirectedGraph =
     coPurchaseMemo.get(spark, Seq(Tables.path(dir, "lineitem"))) {
-      import graft.core.GraftSession.LineageOps
       val li = Tables.lineitem(spark, dir)
         .select(col("l_orderkey"), col("l_partkey"))
       val nBaskets = li.select("l_orderkey").distinct().count() // scalar, pre-plan
       val minSup = math.max(2L, nBaskets / 75000L)
-      li.as("x").join(li.as("y"),
+      val pairs = li.as("x").join(li.as("y"),
           col("x.l_orderkey") === col("y.l_orderkey") &&
             col("x.l_partkey") < col("y.l_partkey"))
         .groupBy(col("x.l_partkey").as("a"), col("y.l_partkey").as("b"))
         .agg(count(lit(1)).as("c"))
         .where(col("c") >= minSup)
-        .select(col("a"), col("b"))
-        .truncateLineage() // materialized once, shared by the family
+      graft.operators.GraphRank.prepareUndirected(pairs, "a", "b")
     }
 
   /** The supplier⇄customer ranking graph's prepared artifacts
@@ -973,7 +967,7 @@ object JoinQueries {
 
   // Shared edge CTE for the graph-family oracles: id-ordered part
   // pairs at RELATIVE support max(2, nBaskets div 75000), mirroring
-  // coPurchaseEdges exactly (the group-by makes pairs distinct; the
+  // coPurchaseGraph's pairs exactly (the group-by makes pairs distinct; the
   // scalar subquery mirrors the engine's pre-plan basket count).
   // Name-parameterized because modularitySql needs a second copy in
   // a scope where labelpropSql already binds `pp` — every copy MUST

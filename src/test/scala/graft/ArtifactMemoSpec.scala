@@ -31,14 +31,21 @@ class ArtifactMemoSpec extends SparkSpec {
         .coalesce(1).write.mode("overwrite").parquet(Tables.path(dir, "documents"))
     }
     // `triangles` disjoint part triples, each bought together in two
-    // orders: support 2 puts each triple's three edges in the
-    // co-purchase graph, one triangle apiece
+    // orders, plus a fourth part bought twice with the triple's first:
+    // support 2 puts each triple's three edges and one pendant edge in
+    // the co-purchase graph — one triangle and two predictable links
+    // (pendant to the other two corners) apiece
     def writeLineitem(dir: String, triangles: Int): Unit =
-      (for (t <- 0 until triangles; o <- Seq(2 * t, 2 * t + 1); p <- 1 to 3)
-        yield (o.toLong, (3 * t + p).toLong))
+      (for (t <- 0 until triangles;
+            (o, parts) <- Seq(0 -> Seq(1, 2, 3), 1 -> Seq(1, 2, 3), 2 -> Seq(1, 4), 3 -> Seq(1, 4));
+            p <- parts)
+        yield ((4 * t + o).toLong, (4 * t + p).toLong))
         .toDF("l_orderkey", "l_partkey")
         .coalesce(1).write.mode("overwrite").parquet(Tables.path(dir, "lineitem"))
-    val names = Seq("text_bpe_tokens", "text_ppl_buckets", "graph_triangles")
+    // the co-purchase memo holds the whole prepared graph: every
+    // consumer of its edges, degrees or orientation must rebuild
+    val names = Seq("text_bpe_tokens", "text_ppl_buckets", "graph_triangles",
+      "graph_link_prediction", "graph_modularity")
     def run(dir: String, name: String): DataFrame = SparkEntry.queries(name)(spark, dir)
 
     writeDocs(live, 1)

@@ -5,6 +5,9 @@ import graft.operators.GraphRank
 
 class GraphRankSpec extends SparkSpec {
 
+  private def undirected(edges: org.apache.spark.sql.DataFrame): GraphRank.UndirectedGraph =
+    GraphRank.prepareUndirected(edges, "a", "b")
+
   test("symmetric ring: all nodes converge to equal rank") {
     import spark.implicits._
     val ring = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("a", "b")
@@ -35,7 +38,7 @@ class GraphRankSpec extends SparkSpec {
   test("triangleCounts: K4 gives every node C(3,2)=3 triangles") {
     import spark.implicits._
     val k4 = (for { a <- 1L to 4L; b <- 1L to 4L if a < b } yield (a, b)).toDF("a", "b")
-    val got = GraphRank.triangleCounts(k4, "a", "b")
+    val got = GraphRank.triangleCounts(undirected(k4))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
   }
@@ -48,7 +51,7 @@ class GraphRankSpec extends SparkSpec {
     val messy = Seq(
       (1L, 2L), (2L, 1L), (3L, 2L), (1L, 3L), (3L, 3L), (3L, 4L)
     ).toDF("a", "b")
-    val got = GraphRank.triangleCounts(messy, "a", "b")
+    val got = GraphRank.triangleCounts(undirected(messy))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
   }
@@ -57,7 +60,7 @@ class GraphRankSpec extends SparkSpec {
     import spark.implicits._
     // {1,2,3} and {2,3,4} share edge 2-3: nodes 2,3 are on 2 triangles
     val e = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L)).toDF("a", "b")
-    val got = GraphRank.triangleCounts(e, "a", "b")
+    val got = GraphRank.triangleCounts(undirected(e))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(1L -> 1L, 2L -> 2L, 3L -> 2L, 4L -> 1L))
   }
@@ -68,7 +71,7 @@ class GraphRankSpec extends SparkSpec {
     // 2-core is exactly the K4, reached within 2 rounds.
     val k4 = for { a <- 1L to 4L; b <- 1L to 4L if a < b } yield (a, b)
     val e = (k4 ++ Seq((4L, 5L), (5L, 6L))).toDF("a", "b")
-    val got = GraphRank.kCore(e, "a", "b", k = 2, rounds = 3)
+    val got = GraphRank.kCore(undirected(e), k = 2, rounds = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
   }
@@ -80,22 +83,23 @@ class GraphRankSpec extends SparkSpec {
     // re-filter must drop them — only node 3 (degree 2 in the last
     // surviving subgraph) may be returned.
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("a", "b")
-    val oneRound = GraphRank.kCore(chain, "a", "b", k = 2, rounds = 1)
+    val g = undirected(chain)
+    val oneRound = GraphRank.kCore(g, k = 2, rounds = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(oneRound === Map(3L -> 2L))
     // at fixpoint the 2-core of a chain is empty
-    val converged = GraphRank.kCore(chain, "a", "b", k = 2, rounds = 4)
+    val converged = GraphRank.kCore(g, k = 2, rounds = 4)
     assert(converged.isEmpty)
   }
 
   test("kCore: guards on k and round bounds") {
     import spark.implicits._
-    val e = Seq((1L, 2L)).toDF("a", "b")
+    val g = undirected(Seq((1L, 2L)).toDF("a", "b"))
     intercept[IllegalArgumentException] {
-      GraphRank.kCore(e, "a", "b", k = 0, rounds = 3)
+      GraphRank.kCore(g, k = 0, rounds = 3)
     }
     intercept[IllegalArgumentException] {
-      GraphRank.kCore(e, "a", "b", k = 2, rounds = 0)
+      GraphRank.kCore(g, k = 2, rounds = 0)
     }
   }
 
@@ -105,7 +109,7 @@ class GraphRankSpec extends SparkSpec {
     // round 2 settles both cliques on their min member id
     val e = Seq((1L, 2L), (2L, 3L), (1L, 3L),
       (10L, 11L), (11L, 12L), (10L, 12L)).toDF("a", "b")
-    val got = GraphRank.labelPropagation(e, "a", "b", rounds = 2)
+    val got = GraphRank.labelPropagation(undirected(e), rounds = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L))
@@ -119,7 +123,7 @@ class GraphRankSpec extends SparkSpec {
     val k4a = for { a <- 1L to 4L; b <- 1L to 4L if a < b } yield (a, b)
     val k4b = for { a <- 5L to 8L; b <- 5L to 8L if a < b } yield (a, b)
     val e = (k4a ++ k4b ++ Seq((4L, 5L))).toDF("a", "b")
-    val got = GraphRank.labelPropagation(e, "a", "b", rounds = 4)
+    val got = GraphRank.labelPropagation(undirected(e), rounds = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.filterKeys(_ <= 4L).values.toSet.size === 1)
     assert(got.filterKeys(_ >= 5L).values.toSet.size === 1)
@@ -131,17 +135,17 @@ class GraphRankSpec extends SparkSpec {
     // star 0-{1..5} is bipartite: center and leaves swap label sets
     // each round. The fixed round count pins the phase — that's the
     // documented contract, not a bug to paper over.
-    val star = (1L to 5L).map(i => (0L, i)).toDF("a", "b")
-    val r2 = GraphRank.labelPropagation(star, "a", "b", rounds = 2)
+    val star = undirected((1L to 5L).map(i => (0L, i)).toDF("a", "b"))
+    val r2 = GraphRank.labelPropagation(star, rounds = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val r3 = GraphRank.labelPropagation(star, "a", "b", rounds = 3)
+    val r3 = GraphRank.labelPropagation(star, rounds = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // even phase: center holds the min leaf's prior label path (0),
     // leaves hold the center's (1); odd phase flips
     assert(r2 === Map(0L -> 0L, 1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L))
     assert(r3 === Map(0L -> 1L, 1L -> 0L, 2L -> 0L, 3L -> 0L, 4L -> 0L, 5L -> 0L))
     // and re-running the same round count reproduces bit for bit
-    val r2b = GraphRank.labelPropagation(star, "a", "b", rounds = 2)
+    val r2b = GraphRank.labelPropagation(star, rounds = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(r2b === r2)
   }
@@ -150,9 +154,9 @@ class GraphRankSpec extends SparkSpec {
     import spark.implicits._
     val messy = Seq((1L, 2L), (2L, 1L), (2L, 2L), (2L, 3L), (3L, 1L)).toDF("a", "b")
     val clean = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("a", "b")
-    val a = GraphRank.labelPropagation(messy, "a", "b", rounds = 3)
+    val a = GraphRank.labelPropagation(undirected(messy), rounds = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = GraphRank.labelPropagation(clean, "a", "b", rounds = 3)
+    val b = GraphRank.labelPropagation(undirected(clean), rounds = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(a === b)
   }
@@ -162,7 +166,7 @@ class GraphRankSpec extends SparkSpec {
     // path 1-2-3-4-5 plus a triangle 10-11-12: mixed degrees incl. deg-1 ends
     val e = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L),
       (10L, 11L), (11L, 12L), (10L, 12L)).toDF("a", "b")
-    val w = GraphRank.randomWalks(e, "a", "b", seedMod = 1, steps = 4)
+    val w = GraphRank.randomWalks(undirected(e), seedMod = 1, steps = 4)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     val seeds = w.filter(_._2 == 0).map(_._3).toSet
     assert(seeds === Set(1L, 2L, 3L, 4L, 5L, 10L, 11L, 12L))
@@ -182,7 +186,7 @@ class GraphRankSpec extends SparkSpec {
       }
     }
     // deterministic: a second run reproduces bit for bit
-    val w2 = GraphRank.randomWalks(e, "a", "b", seedMod = 1, steps = 4)
+    val w2 = GraphRank.randomWalks(undirected(e), seedMod = 1, steps = 4)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     assert(w.sorted.toSeq === w2.sorted.toSeq)
   }
@@ -191,14 +195,16 @@ class GraphRankSpec extends SparkSpec {
     import spark.implicits._
     // path 0-1-2-3-4-5-6, plus detached pair 100-101; seeds {0, 100}
     val e = (Seq((100L, 101L)) ++ (0L to 5L).map(i => (i, i + 1))).toDF("a", "b")
-    val d = GraphRank.bfsDistances(e, "a", "b", n => n === 0L || n === 100L, rounds = 4)
+    val d = GraphRank.bfsDistances(undirected(e), n => n === 0L || n === 100L,
+      rounds = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(d(0L) === 0L && d(1L) === 1L && d(4L) === 4L)
     assert(!d.contains(5L) && !d.contains(6L), "beyond the round bound must be absent")
     assert(d(100L) === 0L && d(101L) === 1L)
     // two seeds on one component: distance is the MIN over seeds
     val ring = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 0L)).toDF("a", "b")
-    val dr = GraphRank.bfsDistances(ring, "a", "b", n => n === 0L || n === 3L, rounds = 4)
+    val dr = GraphRank.bfsDistances(undirected(ring), n => n === 0L || n === 3L,
+      rounds = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(dr === Map(0L -> 0L, 3L -> 0L, 1L -> 1L, 4L -> 1L, 2L -> 1L))
   }
@@ -275,8 +281,9 @@ class GraphRankSpec extends SparkSpec {
     // node 2 (deg 3: hub, 1, 3)
     val edges = ((1L to 10L).map(l => (100L, l)) ++ Seq((1L, 2L), (2L, 3L)))
       .toDF("a", "b")
-    val full = GraphRank.linkPrediction(edges, "a", "b", topK = 100)
-    val capped = GraphRank.linkPrediction(edges, "a", "b", topK = 100,
+    val g = undirected(edges)
+    val full = GraphRank.linkPrediction(g, topK = 100)
+    val capped = GraphRank.linkPrediction(g, topK = 100,
       maxMiddleDegree = Some(5L))
     def pairs(df: org.apache.spark.sql.DataFrame) = df.select("x", "y")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -294,21 +301,30 @@ class GraphRankSpec extends SparkSpec {
     // 1e6 div (2 + 2 - 1)
     assert(r13.getAs[Long]("jacc_x1e6") === 333333L)
     intercept[IllegalArgumentException] {
-      GraphRank.linkPrediction(edges, "a", "b", topK = 5,
-        maxMiddleDegree = Some(1L))
+      GraphRank.linkPrediction(g, topK = 5, maxMiddleDegree = Some(1L))
     }
   }
 
-  test("linkPrediction: assumeCanonical equals the default on canonical input") {
+  test("prepareUndirected: a messy edge list prepares the same graph as the clean one") {
     import spark.implicits._
-    // canonical by construction: a < b, duplicate-free
-    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 5L))
-      .toDF("a", "b")
-    val viaCanon = GraphRank.linkPrediction(edges, "a", "b", topK = 50)
-      .collect().map(_.toSeq).toSet
-    val assumed = GraphRank.linkPrediction(edges, "a", "b", topK = 50,
-      assumeCanonical = true).collect().map(_.toSeq).toSet
-    assert(viaCanon === assumed)
-    assert(assumed.nonEmpty)
+    // triangle {1,2,3}, a 4-cycle closing through 2-4-5-3 and a
+    // pendant 5-6: triangles, wedge candidates, a peeled node and
+    // more than one label
+    val cleanEdges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 5L), (4L, 5L), (5L, 6L))
+    val messyEdges = cleanEdges.flatMap { case (a, b) => Seq((b, a), (a, b), (b, a)) } ++
+      Seq((1L, 1L), (4L, 4L), (6L, 6L))
+    val clean = undirected(cleanEdges.toDF("a", "b"))
+    val messy = undirected(messyEdges.toDF("a", "b"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    assert(messy.m === clean.m)
+    for ((name, op) <- Seq[(String, GraphRank.UndirectedGraph => org.apache.spark.sql.DataFrame)](
+        "triangleCounts" -> (g => GraphRank.triangleCounts(g)),
+        "linkPrediction" -> (g => GraphRank.linkPrediction(g, topK = 50)),
+        "kCore" -> (g => GraphRank.kCore(g, k = 2, rounds = 3)),
+        "labelPropagation" -> (g => GraphRank.labelPropagation(g, rounds = 3)))) {
+      val want = rows(op(clean))
+      assert(want.nonEmpty, s"$name: the fixture must exercise the operator")
+      assert(rows(op(messy)) === want, name)
+    }
   }
 }

@@ -64,7 +64,8 @@ class OperatorPropertiesSpec extends SparkSpec {
         if undirected((i, j)) && undirected((j, k)) && undirected((i, k))
       } yield Seq(i, j, k)).flatten
         .groupBy(identity).map { case (n, xs) => n -> xs.size.toLong }
-      val got = GraphRank.triangleCounts(edges.toDF("a", "b"), "a", "b")
+      val got = GraphRank.triangleCounts(
+        GraphRank.prepareUndirected(edges.toDF("a", "b"), "a", "b"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got === expected, s"trial $trial: edges=$undirected")
     }
@@ -94,7 +95,8 @@ class OperatorPropertiesSpec extends SparkSpec {
       val expected = cur.toSeq.flatMap(e => Seq(e._1, e._2))
         .groupBy(identity).map { case (n, xs) => n -> xs.size.toLong }
       // n rounds always suffice for convergence on n nodes
-      val got = GraphRank.kCore(edges.toDF("a", "b"), "a", "b", k, rounds = nNodes)
+      val got = GraphRank.kCore(GraphRank.prepareUndirected(edges.toDF("a", "b"), "a", "b"), k,
+        rounds = nNodes)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got === expected, s"trial $trial k=$k")
     }
